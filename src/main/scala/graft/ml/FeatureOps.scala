@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Exact.{exactSum, money}
 import graft.functions.TextFunctions._
 
 /** DataFrame-native feature engineering (SURVEY.md §2 block E) — the
@@ -26,7 +27,7 @@ object FeatureOps {
   def qStandardScaler(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
     val stats = c.agg(
-      (sum(col("c_acctbal").cast("decimal(12,2)")).cast("double") / count(lit(1))).as("mu"),
+      (exactSum(money(col("c_acctbal"))).cast("double") / count(lit(1))).as("mu"),
       stddev_samp(col("c_acctbal")).as("sd"))
     c.crossJoin(broadcast(stats))
       .select(col("c_custkey"),

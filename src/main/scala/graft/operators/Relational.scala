@@ -1,16 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Exact.{exactSum, money, rate}
 
 /** Relational / analytic core (SURVEY.md §2 block A).
   *
-  * Oracle-parity rules (SURVEY.md §5): money sums run in exact decimal
-  * (the generated data is 2-dp) and are cast to double only at the
-  * output boundary, so Spark and DuckDB produce bit-identical values
-  * regardless of partial-aggregation order. Statistical aggregates
+  * Oracle-parity rules (SURVEY.md §5): money sums run exact on unscaled
+  * Long lanes ([[graft.functions.Exact]]: the generated data is 2-dp,
+  * so each value is its cents, and products of lanes stay exact) and
+  * are cast to double once, at the output, so Spark and DuckDB produce
+  * bit-identical values regardless of partial-aggregation order. No
+  * BigDecimal is built on the row path. Statistical aggregates
   * (stddev/corr/percentile) are rounded at the boundary instead.
   *
   * Scale notes: dims (region/nation/supplier/part/customer) are
@@ -19,14 +22,6 @@ import graft.Tables
   */
 object Relational {
 
-  /** Exact 2-dp decimal view of a generated money/qty column. */
-  private def dec(c: Column): Column = c.cast("decimal(12,2)")
-  /** Exact small decimal (discount/tax in [0,1], 2-dp). */
-  private def pct(c: Column): Column = c.cast("decimal(8,2)")
-  /** Decimal-exact SUM(price * (1-discount)) surfaced as double. */
-  private def revenue(price: Column, disc: Column): Column =
-    sum(dec(price) * (lit(1) - pct(disc))).cast("double")
-
   // ---------------------------------------------------------------- A1
   /** TPC-H Q1 pattern: scan-heavy filter + groupBy + multi-aggregate.
     * Filter reaches the parquet scan as a pushed predicate.
@@ -34,16 +29,18 @@ object Relational {
   def q1PricingSummary(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
+    val qty = exactSum(money(col("l_quantity"))).cast("double")
+    val price = exactSum(money(col("l_extendedprice"))).cast("double")
+    val discPrice = money(col("l_extendedprice")) * rate(col("l_discount")).oneMinus
     li.groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
-        sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
-        sum(dec(col("l_extendedprice"))).cast("double").as("sum_base_price"),
-        revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
-        sum(dec(col("l_extendedprice")) * (lit(1) - pct(col("l_discount")))
-          * (lit(1) + pct(col("l_tax")))).cast("double").as("sum_charge"),
-        (sum(dec(col("l_quantity"))).cast("double") / count(lit(1))).as("avg_qty"),
-        (sum(dec(col("l_extendedprice"))).cast("double") / count(lit(1))).as("avg_price"),
-        (sum(pct(col("l_discount"))).cast("double") / count(lit(1))).as("avg_disc"),
+        qty.as("sum_qty"),
+        price.as("sum_base_price"),
+        exactSum(discPrice).cast("double").as("sum_disc_price"),
+        exactSum(discPrice * rate(col("l_tax")).onePlus).cast("double").as("sum_charge"),
+        (qty / count(lit(1))).as("avg_qty"),
+        (price / count(lit(1))).as("avg_price"),
+        (exactSum(rate(col("l_discount"))).cast("double") / count(lit(1))).as("avg_disc"),
         count(lit(1)).as("count_order"))
   }
 
@@ -80,7 +77,8 @@ object Relational {
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg(revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
+      .agg(exactSum(money(col("l_extendedprice")) * rate(col("l_discount")).oneMinus)
+        .cast("double").as("revenue"))
       .select(col("l_orderkey"), to_date(col("o_orderdate")).as("o_orderdate"), col("revenue"))
       .orderBy(col("revenue").desc, col("l_orderkey").asc)
       .limit(10)
@@ -118,7 +116,8 @@ object Relational {
         col("c_nationkey") === col("s_nationkey"))
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
-      .agg(revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
+      .agg(exactSum(money(col("l_extendedprice")) * rate(col("l_discount")).oneMinus)
+        .cast("double").as("revenue"))
   }
 
   val q5Sql: String =
@@ -153,7 +152,7 @@ object Relational {
 
   // ---------------------------------------------------------------- A5
   /** Running (prefix) sum of quantity per supplier over ship order.
-    * Decimal-exact running sum; restricted to a supplier slice to
+    * Exact running sum; restricted to a supplier slice to
     * bound output size (the operator itself is O(rows)).
     */
   def qRunningSum(spark: SparkSession, dir: String): DataFrame = {
@@ -164,7 +163,7 @@ object Relational {
       .filter(col("l_suppkey") < 5)
       .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"), col("l_shipdate"))
-      .withColumn("running_qty", sum(dec(col("l_quantity"))).over(w).cast("double"))
+      .withColumn("running_qty", exactSum(money(col("l_quantity"))).over(w).cast("double"))
       .drop("l_shipdate")
   }
 
@@ -181,7 +180,7 @@ object Relational {
     Tables.orders(spark, dir)
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),
-        sum(dec(col("o_totalprice"))).cast("double").as("total"))
+        exactSum(money(col("o_totalprice"))).cast("double").as("total"))
 
   val qRollupSql: String =
     """SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
@@ -194,7 +193,7 @@ object Relational {
     Tables.lineitem(spark, dir)
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"),
-        sum(dec(col("l_quantity"))).cast("double").as("sum_qty"))
+        exactSum(money(col("l_quantity"))).cast("double").as("sum_qty"))
 
   val qCubeSql: String =
     """SELECT l_returnflag, l_linestatus, count(*) AS n,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Exact.{exactSum, money}
 
 /** Skew-mitigation join utilities (SURVEY.md §4).
   *
@@ -43,7 +44,7 @@ object SkewJoin {
     saltedJoin(ev, cust, "user_id", col("event_id"), salts = 8)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"))
+        exactSum(money(col("value"))).cast("double").as("sum_value"))
   }
 
   val qSaltedJoinSql: String =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Exact.{exactSum, money}
 
 /** Temporal / event operators (SURVEY.md §2: A6, A12, A13, F1–F4).
   *
@@ -385,7 +386,7 @@ object TemporalOps {
       .withColumn("bucket", (expr("(ts DIV 1000000000) DIV 300") * 300).cast("long"))
       .groupBy(col("bucket"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"))
+        exactSum(money(col("value"))).cast("double").as("sum_value"))
 
   val qTumblingWindowSql: String =
     s"""SELECT ($duckTsSec // 300) * 300 AS bucket, event_type, count(*) AS n,
@@ -929,7 +930,7 @@ object TemporalOps {
       .withColumn("ets", timestamp_micros(expr("ts DIV 1000")))
       .groupBy(window(col("ets"), "10 minutes", "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"))
+        exactSum(money(col("value"))).cast("double").as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("bucket"),
         col("event_type"), col("n"), col("sum_value"))
 

@@ -220,4 +220,163 @@ class ExpressionSpec extends AnyFunSuite {
       .agg(max(col("d"))).as[Double].first()
     assert(diff < 1e-12)
   }
+
+  /** Run `body` under each ANSI setting and each evaluation path
+    * (whole-stage codegen, and interpreted expressions), restoring the
+    * session's settings afterwards.
+    */
+  private def underEachMode(body: Boolean => Unit): Unit = {
+    val keys = Seq("spark.sql.ansi.enabled", "spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (ansi <- Seq(false, true);
+           (ws, factory) <- Seq(("true", "FALLBACK"), ("false", "NO_CODEGEN"))) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+        spark.conf.set("spark.sql.codegen.wholeStage", ws)
+        spark.conf.set("spark.sql.codegen.factoryMode", factory)
+        withClue(s"ansi=$ansi wholeStage=$ws factory=$factory: ")(body(ansi))
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("exact money lane and ExactSum equal a BigDecimal reference and the decimal sum, ANSI on and off") {
+    import graft.functions.Exact.{exactSum, money}
+    import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+    // cast(x AS decimal(12,2)): HALF_UP of the double's decimal string;
+    // None where the cast yields null (ANSI off) or fails (ANSI on)
+    def ref(x: java.lang.Double): Option[JBigDecimal] =
+      if (x == null || x.isNaN || x.isInfinite) None
+      else {
+        val d = new JBigDecimal(x.toString).setScale(2, RoundingMode.HALF_UP)
+        if (d.abs.compareTo(new JBigDecimal("1e10")) >= 0) None else Some(d)
+      }
+    val rng = new scala.util.Random(7)
+    val edge: Seq[java.lang.Double] = Seq[Double](1.005, 2.675, 0.125, -1.005, -2.675,
+      -0.125, 0.005, -0.005, 0.015, 99.995, 0.1, 0.2, 0.3, -12.34, 1234567.89,
+      9999999999.99, -9999999999.99, 9999999999.994, 9999999999.995, 1e10, -1e10,
+      1.5e10, 1e300, Double.MinPositiveValue, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0, 0.0).map(Double.box) :+ null
+    val random: Seq[java.lang.Double] = Seq.fill[Double](300) {
+      val cents = (rng.nextLong() % 2000000000000L) / 2
+      rng.nextInt(3) match {
+        case 0 => cents / 100.0                       // 2-dp: the fast path
+        case 1 => (cents * 10 + rng.nextInt(10)) / 1000.0  // 3-dp: HALF_UP ties and near-ties
+        case _ => rng.nextGaussian() * 1e6           // arbitrary doubles
+      }
+    }.map(Double.box)
+    val values = edge ++ random
+    val df = values.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("id", "x").repartition(4)
+    // built per mode: a Catalyst cast binds the ANSI setting when built
+    def lane = exactSum(money(col("x")))
+    def old = sum(col("x").cast("decimal(12,2)"))
+    underEachMode { ansi =>
+      val ok = df.filter(col("id").isin(values.indices.filter(i =>
+        ref(values(i)).isDefined || values(i) == null): _*))
+      val framed = if (ansi) ok else df
+      // per row: a one-row group's sum is that row's cast
+      val rows = framed.groupBy(col("id"))
+        .agg(lane.as("n"), old.as("o"), lane.cast("double").as("nd"), old.cast("double").as("od"))
+        .collect()
+      assert(rows.length == framed.count())
+      rows.foreach { r =>
+        val i = r.getLong(0).toInt
+        val expect = ref(values(i))
+        assert(Option(r.getDecimal(1)).map(_.stripTrailingZeros) ==
+          expect.map(_.stripTrailingZeros), s"lane of ${values(i)}")
+        assert(Option(r.getDecimal(2)).map(_.stripTrailingZeros) ==
+          expect.map(_.stripTrailingZeros), s"decimal cast of ${values(i)}")
+        assert(r.isNullAt(3) == r.isNullAt(4) && (r.isNullAt(3) ||
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3)) ==
+            java.lang.Double.doubleToRawLongBits(r.getDouble(4))), s"double of ${values(i)}")
+      }
+      // one group over every row (merges across the 4 partitions), and
+      // a running window frame, bit-identical to the decimal sum
+      val whole = framed.agg(lane.cast("double"), old.cast("double")).first()
+      assert(whole.getDouble(0) == whole.getDouble(1))
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("id"))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+      val run = framed.select(lane.over(w).as("n"), old.over(w).as("o")).collect()
+      assert(run.forall(r => r.get(0) == null && r.get(1) == null ||
+        r.getDecimal(0).compareTo(r.getDecimal(1)) == 0))
+      // under ANSI the cast's errors (and its nulls, e.g. NaN) surface
+      // from the lane exactly as from the decimal sum; with ANSI off
+      // they are all nulls (checked above)
+      def rootKind(e: Throwable): String =
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last match {
+          case t: org.apache.spark.SparkThrowable => s"${t.getClass.getName}:${t.getCondition}"
+          case t => t.getClass.getName
+        }
+      if (ansi) {
+        val failures = values.filter(v => v != null && ref(v).isEmpty).count { v =>
+          val one = Seq(v).toDF("x")
+          val (n, o) = (scala.util.Try(one.agg(lane).collect().toSeq),
+            scala.util.Try(one.agg(old).collect().toSeq))
+          assert(n.isFailure == o.isFailure, s"failure of $v: $n vs $o")
+          if (o.isFailure) assert(rootKind(n.failed.get) == rootKind(o.failed.get), s"error for $v")
+          else assert(n.get.map(_.get(0)) == o.get.map(_.get(0)), s"result for $v")
+          o.isFailure
+        }
+        assert(failures >= 5, "out-of-range casts must fail under ANSI")
+      }
+    }
+  }
+
+  test("ExactSum: Long-overflowing products and group sums past 2^63 stay exact") {
+    import graft.functions.Exact.{exactSum, money, rate}
+    import java.math.{BigDecimal => JBigDecimal}
+    val big = 9999999999.99   // lane 999,999,999,999: a product of two overflows a Long
+    val mid = 30000000.0      // lane 3e9: the product is 9e18, so 2 rows pass 2^63
+    val rows: Seq[(Int, java.lang.Double, java.lang.Double)] =
+      Seq.fill(8)((0, big: java.lang.Double, big: java.lang.Double)) ++
+      Seq.fill(8)((0, -big: java.lang.Double, 0.01: java.lang.Double)) ++
+      Seq.fill(12)((1, mid: java.lang.Double, mid: java.lang.Double)) ++
+      Seq.fill(12)((2, -mid: java.lang.Double, mid: java.lang.Double)) ++
+      Seq.tabulate(12)(i => (3, (if (i % 2 == 0) big else -big): java.lang.Double,
+        (if (i % 3 == 0) null else -big): java.lang.Double)) ++
+      Seq((4, null: java.lang.Double, 1.0: java.lang.Double))
+    def refSum(g: Int): JBigDecimal = {
+      val ts = rows.filter(r => r._1 == g && r._2 != null && r._3 != null)
+        .map(r => new JBigDecimal(r._2.toString).multiply(new JBigDecimal(r._3.toString)))
+      if (ts.isEmpty) null else ts.reduce(_ add _)
+    }
+    val df = rows.toDF("g", "a", "b").repartition(4)
+    val dec = (c: String) => col(c).cast("decimal(12,2)")
+    underEachMode { _ =>
+      val got = df.groupBy(col("g")).agg(
+        exactSum(money(col("a")) * money(col("b"))).as("n"),
+        sum(dec("a") * dec("b")).as("o"),
+        exactSum(money(col("a")) * rate(col("b").cast("double") / 1e9).oneMinus).as("n1"),
+        sum(dec("a") * (lit(1) - (col("b") / 1e9).cast("decimal(8,2)"))).as("o1"),
+        exactSum(money(col("a")) * money(col("b")) * money(col("b"))).cast("double").as("n3"),
+        sum(dec("a") * dec("b") * dec("b")).cast("double").as("o3"))
+        .collect().map(r => r.getInt(0) -> r).toMap
+      assert(got.keySet == Set(0, 1, 2, 3, 4))
+      for ((g, r) <- got) {
+        val expect = refSum(g)
+        if (expect == null) assert(r.isNullAt(1) && r.isNullAt(2), s"group $g")
+        else {
+          assert(r.getDecimal(1).compareTo(expect) == 0, s"group $g vs reference")
+          assert(r.getDecimal(2).compareTo(expect) == 0, s"group $g decimal sum")
+        }
+        assert(Option(r.getDecimal(3)).map(_.stripTrailingZeros) ==
+          Option(r.getDecimal(4)).map(_.stripTrailingZeros), s"group $g: a·(1-b)")
+        assert(Option(r.get(5)) == Option(r.get(6)), s"group $g: three factors")
+      }
+      assert(refSum(1).compareTo(new JBigDecimal(BigInt(2).pow(63).bigInteger)
+        .movePointLeft(4)) > 0, "group 1 must carry past 2^63")
+      assert(refSum(2).signum < 0 && refSum(2).abs.compareTo(refSum(1)) == 0)
+    }
+    // a single-lane group whose unscaled sum passes 2^63 (9.3M rows of
+    // 999,999,999,999 cents): the hi limb carries, the sum stays exact
+    val n = 9300000L
+    val s = spark.range(0, n, 1, 4).select((col("id") * 0 + big).as("x"))
+      .agg(exactSum(money(col("x")))).first().getDecimal(0)
+    assert(s.compareTo(new JBigDecimal(big.toString).multiply(new JBigDecimal(n))) == 0)
+  }
 }
