@@ -54,8 +54,8 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
   /** Drop every catalog table whose LOWERCASED name fully matches
-    * `re` — the shared deregister path for the persisted stores
-    * (SigStore / IvfIndex / PqIndex). Lowercased because the session
+    * `re` — the deregister path of the persisted stores
+    * ([[Store.deregister]]). Lowercased because the session
     * catalog stores identifiers case-insensitively, so a
     * case-sensitive prefix match against a mixed-case stem silently
     * drops nothing; full-match regexes (stem + hex tag + known

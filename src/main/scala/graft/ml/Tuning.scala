@@ -7,7 +7,7 @@ import org.apache.spark.ml.feature.{HashingTF, StringIndexer, Tokenizer}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Store, Tables}
 
 /** MLlib pipeline tuning (SURVEY.md §2: E7, E7b, E8, E13) — estimator
   * pipelines tuned with deterministic-fold cross-validation over a
@@ -36,22 +36,12 @@ object Tuning {
       array_to_vector(col("embedding")).as("features"),
       col("label").cast("double").as("label"))
 
-  /** Persisted-prediction store scaffold shared by the three CV-style
-    * queries: one external parquet location per (family, corpus
-    * fingerprint), built once per corpus state, `_DONE` marker written
-    * LAST so a crashed build re-runs (the write itself is idempotent
-    * overwrite). fitCount observes warm-path reuse; lastLoc feeds the
-    * late-bound oracle exactly as [[KmeansStore]] does (Verify runs
-    * queries before dumping oracle_sql.json).
-    *
-    * Concurrency contract (same as Maintenance.compactStore):
-    * SINGLE WRITER per warehouse. `ensure`'s check-then-build on the
-    * `_DONE` marker is crash-safe (marker last, overwrite-idempotent
-    * build) but NOT concurrent-safe — two sessions sharing a
-    * warehouse can both observe the missing marker and race the
-    * build. On a shared cluster warehouse, serialize store builds
-    * externally (one materializer job), exactly as for the other
-    * persisted stores (SigStore/IvfIndex).
+  /** Persisted-prediction store scaffold shared by the CV-style
+    * queries: a path-only [[graft.Store]] per (family, corpus
+    * fingerprint), built once per corpus state; the build writes plain
+    * parquet under one location. fitCount observes warm-path reuse;
+    * lastLoc feeds the late-bound oracle exactly as [[KmeansStore]]
+    * does (Verify runs queries before dumping oracle_sql.json).
     */
   private[ml] abstract class PredStore(family: String, srcTable: String) {
     import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
@@ -61,23 +51,16 @@ object Tuning {
     /** Fit everything and write the artifact tables under `loc`. */
     protected def build(spark: SparkSession, dir: String, loc: String): Unit
 
-    private def stem(dir: String): String =
-      s"graft_${family}_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + "_"
+    private val Root = Store.Artifact()
+    private val store = new Store(family, srcTable, "", Seq(Root))((spark, dir, at) => {
+      fitCount.incrementAndGet()
+      build(spark, dir, at.path(Root))
+    })
 
     def ensure(spark: SparkSession, dir: String): String = {
-      val tag = Tables.Probe.corpusTag(spark, s"$dir/$srcTable.parquet", fresh = true)
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      val loc = java.nio.file.Paths.get(new java.net.URI(w).getPath)
-        .resolve(stem(dir) + tag)
-      val done = loc.resolve("_DONE")
-      if (!java.nio.file.Files.exists(done)) {
-        fitCount.incrementAndGet()
-        build(spark, dir, loc.toString)
-        java.nio.file.Files.createFile(done)
-      }
-      lastLoc.set(loc.toString)
-      loc.toString
+      val loc = store.ensure(spark, dir).path(Root)
+      lastLoc.set(loc)
+      loc
     }
 
     /** Bounded fit pool — CrossValidator's parallelism knob, explicit. */
@@ -301,9 +284,8 @@ object Tuning {
     * the DuckDB oracle replay every published statistic (sizes,
     * within-cluster SSE) from the SAME assignment over the raw
     * embeddings, converting E8 from rows-only to a full hash check.
-    * Same staleness contract as IvfIndex/SigStore: the corpus
-    * fingerprint is part of the table identity; a mutated corpus stops
-    * resolving and `ensure` refits. fitCount observes warm-path reuse.
+    * A [[graft.Store]]: a mutated corpus stops resolving and `ensure`
+    * refits. fitCount observes warm-path reuse.
     */
   object KmeansStore {
     import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
@@ -314,45 +296,24 @@ object Tuning {
       * dumping oracle_sql.json, so it is set when needed). */
     val lastLoc = new AtomicReference[String](null)
 
-    private def stem(dir: String): String =
-      "graft_kmeans_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + "_" + K + "_"
+    // ten clusters need no co-located join: unbucketed
+    private val Asg = Store.Artifact(columns = "vec_id BIGINT, cluster INT")
+    private val store = new Store("kmeans", "embeddings", s"${K}_", Seq(Asg))(
+      (spark, dir, at) => {
+        // cache: Lloyd iterations re-evaluate the input each pass —
+        // uncached this re-ran the scan+projection 20x (58.6s, r2)
+        val data = features(spark, dir).cache(); data.count()
+        fitCount.incrementAndGet()
+        val km = new KMeans().setK(K).setSeed(7).setMaxIter(20)
+        at.write(km.fit(data).transform(data)
+          .select(col("vec_id"), col("prediction").cast("int").as("cluster")), Asg)
+        data.unpersist()
+      })
 
-    private def tableName(spark: SparkSession, dir: String): String =
-      stem(dir) +
-        Tables.Probe.corpusTag(spark, s"$dir/embeddings.parquet", fresh = true)
-
-    private def warehousePath(spark: SparkSession, table: String): java.nio.file.Path = {
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      java.nio.file.Paths.get(new java.net.URI(w).getPath).resolve(table)
-    }
-
-    /** Register-or-build: prefer catalog, then on-disk files, then a
-      * fresh fit + external write (IvfIndex's ensure, minus bucketing —
-      * ten clusters need no co-located join). */
     def ensure(spark: SparkSession, dir: String): String = {
-      val t = tableName(spark, dir)
-      val loc = warehousePath(spark, t)
-      if (!spark.catalog.tableExists(t)) {
-        if (java.nio.file.Files.isDirectory(loc)) {
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          spark.sql(
-            s"""CREATE TABLE $t (vec_id BIGINT, cluster INT)
-               |USING PARQUET LOCATION '$loc'""".stripMargin)
-        } else {
-          // cache: Lloyd iterations re-evaluate the input each pass —
-          // uncached this re-ran the scan+projection 20x (58.6s, r2)
-          val data = features(spark, dir).cache(); data.count()
-          fitCount.incrementAndGet()
-          val km = new KMeans().setK(K).setSeed(7).setMaxIter(20)
-          val asg = km.fit(data).transform(data)
-            .select(col("vec_id"), col("prediction").cast("int").as("cluster"))
-          asg.write.option("path", loc.toString).saveAsTable(t)
-          data.unpersist()
-        }
-      }
-      lastLoc.set(loc.toString)
-      t
+      val at = store.ensure(spark, dir)
+      lastLoc.set(at.path(Asg))
+      at.table(Asg)
     }
   }
 
@@ -600,9 +561,9 @@ object Tuning {
     * identical exact-integer chain from the raw tables — bit-equal by
     * construction, so the artifact needs no late-bound SQL.
     */
-  /** Persisted ALS factor store (the KmeansStore/PredStore staleness
-    * contract): u²/v¹ fixed-point factors plus the rated-pair
-    * projection, built once per corpus fingerprint. The warm
+  /** Persisted ALS factor store (a [[PredStore]]): u²/v¹ fixed-point
+    * factors plus the rated-pair projection, built once per corpus
+    * fingerprint. The warm
     * recommendation path reads ONLY the store — zero corpus scans —
     * and a mutated corpus changes the location, so stale factors stop
     * resolving instead of being served.
@@ -710,50 +671,31 @@ object Tuning {
     val fitCount = new AtomicInteger(0)
     val lastLoc = new AtomicReference[String](null)
 
-    private def stem(dir: String): String =
-      "graft_docclu_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + "_" + K + "_"
-
-    private def tableName(spark: SparkSession, dir: String): String =
-      stem(dir) +
-        Tables.Probe.corpusTag(spark, s"$dir/documents.parquet", fresh = true)
-
-    private def warehousePath(spark: SparkSession, table: String): java.nio.file.Path = {
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      java.nio.file.Paths.get(new java.net.URI(w).getPath).resolve(table)
-    }
+    private val Asg = Store.Artifact(columns = "doc_id BIGINT, cluster INT")
+    private val store = new Store("docclu", "documents", s"${K}_", Seq(Asg))(
+      (spark, dir, at) => {
+        val data = Tables.documents(spark, dir)
+          .select(col("doc_id"),
+            graft.functions.TextFunctions.tokens(col("text")).as("toks"))
+          .cache()
+        data.count()
+        fitCount.incrementAndGet()
+        val tf = new HashingTF().setInputCol("toks").setOutputCol("tf")
+          .setNumFeatures(4096)
+        val idf = new org.apache.spark.ml.feature.IDF()
+          .setInputCol("tf").setOutputCol("features")
+        val tfd = tf.transform(data)
+        val feat = idf.fit(tfd).transform(tfd)
+        val km = new KMeans().setK(K).setSeed(11).setMaxIter(10)
+        at.write(km.fit(feat).transform(feat)
+          .select(col("doc_id"), col("prediction").cast("int").as("cluster")), Asg)
+        data.unpersist()
+      })
 
     def ensure(spark: SparkSession, dir: String): String = {
-      val t = tableName(spark, dir)
-      val loc = warehousePath(spark, t)
-      if (!spark.catalog.tableExists(t)) {
-        if (java.nio.file.Files.isDirectory(loc)) {
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          spark.sql(
-            s"""CREATE TABLE $t (doc_id BIGINT, cluster INT)
-               |USING PARQUET LOCATION '$loc'""".stripMargin)
-        } else {
-          val data = Tables.documents(spark, dir)
-            .select(col("doc_id"),
-              graft.functions.TextFunctions.tokens(col("text")).as("toks"))
-            .cache()
-          data.count()
-          fitCount.incrementAndGet()
-          val tf = new HashingTF().setInputCol("toks").setOutputCol("tf")
-            .setNumFeatures(4096)
-          val idf = new org.apache.spark.ml.feature.IDF()
-            .setInputCol("tf").setOutputCol("features")
-          val tfd = tf.transform(data)
-          val feat = idf.fit(tfd).transform(tfd)
-          val km = new KMeans().setK(K).setSeed(11).setMaxIter(10)
-          km.fit(feat).transform(feat)
-            .select(col("doc_id"), col("prediction").cast("int").as("cluster"))
-            .write.option("path", loc.toString).saveAsTable(t)
-          data.unpersist()
-        }
-      }
-      lastLoc.set(loc.toString)
-      t
+      val at = store.ensure(spark, dir)
+      lastLoc.set(at.path(Asg))
+      at.table(Asg)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Store, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 
@@ -771,11 +771,9 @@ object Dedup {
   /** Persisted MinHash signature store — the state an incremental
     * NEAR-dup ingest path checks arriving batches against, so the
     * existing corpus is signed exactly once (at store build), never
-    * re-shingled per batch. Same external-bucketed-table pattern as
-    * [[Similarity.IvfIndex]]: catalog metadata dies with the session,
-    * the parquet files survive, and a cold session re-registers DDL
-    * over the existing location — zero recompute ([[buildCount]] is
-    * the spec's observability hook).
+    * re-shingled per batch. A [[graft.Store]] over the existing
+    * (non-eval) documents ([[buildCount]] is the spec's observability
+    * hook).
     *
     * Two tables: the wide per-doc signature (bucketed by doc_id, so
     * the est_sim verification join against it arrives pre-shuffled)
@@ -789,94 +787,51 @@ object Dedup {
     val SigBuckets = 8
     val buildCount = new AtomicInteger(0)
 
-    /** Signature-contract tag baked into the table name: a store built
+    /** Signature-contract tag baked into the store name: a store built
       * under different permutation/df-cut/banding constants would
       * silently serve incomparable signatures if re-registered, so a
-      * contract change must land in a NEW table (the old one is just
-      * orphaned files).
+      * contract change must land in a NEW store.
       */
     private val contractTag: String = {
       val s = perms.mkString(",") + s";$MinhashPrime;$MinhashDfCap;$RowsPerBand"
       (scala.util.hashing.MurmurHash3.stringHash(s) & 0x7fffffff).toHexString
     }
 
-    /** The corpus fingerprint is part of the store identity: a store
-      * built over an earlier state of the corpus must not be served
-      * for its current state — the stale name simply stops resolving
-      * (no catalog entry, no files) and `ensure` rebuilds. Same
-      * orphaned-files tradeoff as a contract change.
-      */
-    private def stem(dir: String): String =
-      "graft_sig_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + "_"
+    private val Sig = Store.Artifact(
+      columns = "doc_id BIGINT, " + (0 until NumPerms).map(i => s"m$i BIGINT").mkString(", "),
+      bucket = Some(("doc_id", SigBuckets)))
+    private val Hot = Store.Artifact("_hot", "h BIGINT")
 
-    private def tableName(spark: SparkSession, dir: String): String =
-      // fresh: the staleness contract hinges on seeing the corpus NOW
-      stem(dir) + contractTag +
-        "_" + Tables.Probe.corpusTag(spark, s"$dir/documents.parquet", fresh = true)
-
-    private def warehousePath(spark: SparkSession, table: String): java.nio.file.Path = {
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      java.nio.file.Paths.get(new java.net.URI(w).getPath).resolve(table)
-    }
-
-    private def sigCols: String =
-      (0 until NumPerms).map(i => s"m$i BIGINT").mkString(", ")
-
-    /** Register-or-build over the EXISTING (non-eval) corpus side. */
-    def ensure(spark: SparkSession, dir: String): (String, String) = {
-      val t = tableName(spark, dir)
-      val th = t + "_hot"
-      val loc = warehousePath(spark, t)
-      val locH = warehousePath(spark, th)
-      def registered(n: String) = spark.catalog.tableExists(n)
-      if (!registered(t) || !registered(th)) {
-        if (java.nio.file.Files.isDirectory(loc) && java.nio.file.Files.isDirectory(locH)) {
-          // cold session over a built store: metadata-only re-registration
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          spark.sql(s"DROP TABLE IF EXISTS $th")
-          spark.sql(
-            s"""CREATE TABLE $t (doc_id BIGINT, $sigCols)
-               |USING PARQUET CLUSTERED BY (doc_id) INTO $SigBuckets BUCKETS
-               |LOCATION '$loc'""".stripMargin)
-          spark.sql(s"CREATE TABLE $th (h BIGINT) USING PARQUET LOCATION '$locH'")
-        } else {
-          buildCount.incrementAndGet()
-          val isNew = col("source").isin(EvalSources.map(x => x: Any): _*)
-          val existing = eager(shingleStream(spark, dir).filter(!isNew))
-            .select(col("doc_id"), col("h"))
-          // df cut over the existing corpus's occurrence stream — the
-          // Zipf head, broadcastable at any scale (see MinhashDfCap)
-          val hot = existing.groupBy(col("h"))
-            .agg(count(lit(1)).as("df")).filter(col("df") > MinhashDfCap)
-            .select(col("h"))
-          hot.coalesce(1).write.option("path", locH.toString)
-            .mode("overwrite").saveAsTable(th)
-          val sh = existing
-            .join(broadcast(spark.table(th)), Seq("h"), "left_anti")
-            .select(col("doc_id"), col("h")).distinct()
-          val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
-            min((lit(a) * col("h") + lit(b)) % MinhashPrime).as(s"m$i")
-          }
-          sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-            .write.bucketBy(SigBuckets, "doc_id")
-            .option("path", loc.toString).mode("overwrite").saveAsTable(t)
+    private val store = new Store("sig", "documents", contractTag + "_", Seq(Sig, Hot))(
+      (spark, dir, at) => {
+        buildCount.incrementAndGet()
+        val isNew = col("source").isin(EvalSources.map(x => x: Any): _*)
+        val existing = eager(shingleStream(spark, dir).filter(!isNew))
+          .select(col("doc_id"), col("h"))
+        // df cut over the existing corpus's occurrence stream — the
+        // Zipf head, broadcastable at any scale (see MinhashDfCap)
+        val hot = existing.groupBy(col("h"))
+          .agg(count(lit(1)).as("df")).filter(col("df") > MinhashDfCap)
+          .select(col("h"))
+        at.write(hot.coalesce(1), Hot)
+        val sh = existing
+          .join(broadcast(spark.table(at.table(Hot))), Seq("h"), "left_anti")
+          .select(col("doc_id"), col("h")).distinct()
+        val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
+          min((lit(a) * col("h") + lit(b)) % MinhashPrime).as(s"m$i")
         }
-      }
-      (t, th)
+        at.write(sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*), Sig)
+      })
+
+    /** Register-or-build; returns (signature table, hot-list table). */
+    def ensure(spark: SparkSession, dir: String): (String, String) = {
+      val at = store.ensure(spark, dir)
+      (at.table(Sig), at.table(Hot))
     }
 
-    /** Drop catalog entries, keep the on-disk store (cold-session sim).
-      * Drops EVERY corpus-fingerprint variant under this corpus's stem
-      * and the current contract — recomputing the current fingerprint
-      * here would miss stores registered under an earlier corpus state
-      * (the drop would no-op and stale entries accumulate across
-      * mutate/deregister cycles).
-      */
+    /** Drop catalog entries, keep the on-disk store (cold-session sim). */
     def deregister(spark: SparkSession, dir: String): Unit =
-      Tables.dropTablesMatching(spark,
-        (java.util.regex.Pattern.quote(stem(dir).toLowerCase) +
-          contractTag + "_[0-9a-f]+(_hot)?").r)
+      store.deregister(spark, dir)
 
     /** Absorb an arriving batch INTO the store: sign it under the
       * store's df cut (identical arithmetic to the probe path) and
@@ -908,86 +863,15 @@ object Dedup {
     }
 
     /** Compact the signature table back to ONE data file per bucket
-      * after a run of [[absorb]]s, PRESERVING the bucket spec (the
-      * pre-shuffled verification join must survive maintenance).
-      * Mechanics: rewrite via a staging bucketed table whose input is
-      * `repartition(SigBuckets, doc_id)` — repartition and bucketing
-      * share the same murmur3 hash-partitioning, so each task holds
-      * exactly one whole bucket and writes exactly one file — then
-      * swap the staged files under the store's original location and
-      * re-register the DDL (the cold-session path). No re-shingling,
-      * no signature recomputation: this is a pure layout rewrite, and
-      * the spec pins [[buildCount]] across it.
-      *
-      * CONCURRENCY CONTRACT (single-writer): the swap is deliberately
-      * NOT atomic — between the DROP/delete and the staged-file move
-      * there is a window where the location is empty, so a concurrent
-      * reader can miss the table and a concurrent [[absorb]] whose
-      * append lands in that window is LOST (its files are deleted or
-      * orphaned by the move). Absorbs against each other are safe
-      * (parquet appends land distinct files); compaction requires the
-      * store quiescent — exactly the maintenance-window contract of
-      * every table format without a transaction log (Hive-style
-      * tables; Iceberg/Delta buy the lock-free version with their
-      * commit protocol, out of scope per §4). The supported schedule —
-      * absorb* → compact → absorb* → compact … strictly serialized —
-      * is spec-proven repeatable (StoreMaintenanceSpec exercises a
-      * full second cycle). Returns the data-file count after
-      * compaction (≤ [[SigBuckets]]; empty buckets write no file).
+      * after a run of [[absorb]]s ([[graft.Store.compact]]), preserving
+      * the bucket spec the pre-shuffled verification join needs. No
+      * re-shingling, no signature recomputation: the spec pins
+      * [[buildCount]] across it, and the serialized absorb* → compact
+      * cycle is spec-proven repeatable. Returns the data-file count
+      * after compaction (≤ [[SigBuckets]]).
       */
-    def compactStore(spark: SparkSession, dir: String): Int = {
-      val t = tableName(spark, dir)
-      val staging = t + "_compacting"
-      val loc = warehousePath(spark, t)
-      val locS = warehousePath(spark, staging)
-      ensure(spark, dir)
-      // read the store FILES as a plain parquet path, not via the
-      // catalog table: a bucketed-table scan advertises the bucket
-      // partitioning, the planner then elides the repartition as
-      // redundant, and the write runs over size-packed read splits —
-      // each holding a MIX of buckets — yielding O(splits × buckets)
-      // files (measured: 29 for 8 buckets). A path read claims no
-      // partitioning, the repartition survives, each task holds
-      // exactly one bucket, and the write lands one file per bucket.
-      spark.read.parquet(loc.toString)
-        .repartition(SigBuckets, col("doc_id"))
-        .write.bucketBy(SigBuckets, "doc_id")
-        .option("path", locS.toString).mode("overwrite").saveAsTable(staging)
-      spark.sql(s"DROP TABLE IF EXISTS $staging") // metadata only; files stay
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(loc)
-      java.nio.file.Files.move(locS, loc)
-      registerSigDdl(spark, t, loc)
-      dataFileCount(loc)
-    }
-
-    private def registerSigDdl(spark: SparkSession, t: String,
-        loc: java.nio.file.Path): Unit =
-      spark.sql(
-        s"""CREATE TABLE $t (doc_id BIGINT, $sigCols)
-           |USING PARQUET CLUSTERED BY (doc_id) INTO $SigBuckets BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-  }
-
-  /** Recursive local-path delete (store maintenance swaps). */
-  private[operators] def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-  }
-
-  /** Visible data files under a store location (hidden/_metadata
-    * excluded) — the compaction spec's observable.
-    */
-  private[graft] def dataFileCount(p: java.nio.file.Path): Int = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.count { f =>
-      val n = f.getFileName.toString
-      java.nio.file.Files.isRegularFile(f) &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }
+    def compactStore(spark: SparkSession, dir: String): Int =
+      store.compact(spark, store.ensure(spark, dir), Sig)
   }
 
   /** Sign an arriving (doc_id, text) batch under the STORE's frozen

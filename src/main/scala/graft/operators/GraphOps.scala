@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Store, Tables}
 
 /** Graph analytics over relationship graphs derived from the corpus
   * (SURVEY.md §2 block M). Complements the C6 connected-components
@@ -87,28 +87,23 @@ object GraphOps {
   private[graft] def mutualKnnPairs(spark: SparkSession, dir: String): DataFrame =
     GraphStore.knn(spark, dir)
 
-  /** Persisted graph store — the IvfIndex/SigStore pattern applied to
-    * the two derived graphs every M-block consumer shares. r12's bench
-    * showed 8 of the 10 slowest queries each re-paying the ~5 s
-    * co-supply derivation COLD (the session cache only helps within a
-    * session); the derivation is a pure function of the lineitem
-    * corpus, so it is a store, not a query. One derivation pass
-    * ([[coSupplyWeighted]], cached for the build only) feeds BOTH
-    * artifacts: the p90-cut strong graph (M1–M4) and the mutual
-    * top-K sparsifier (M5+ and q_sql_bfs). Identity carries the
-    * corpus fingerprint (same staleness contract as SigStore): a
-    * mutated corpus changes the table name, the stale name stops
-    * resolving, and `ensure` rebuilds over the current corpus. Cold
-    * sessions over a built store re-register metadata only.
+  /** Persisted graph store — a [[graft.Store]] over the lineitem
+    * corpus holding the derived graphs every M-block consumer shares.
+    * r12's bench showed 8 of the 10 slowest queries each re-paying the
+    * ~5 s co-supply derivation COLD (the session cache only helps
+    * within a session); the derivation is a pure function of the
+    * lineitem corpus, so it is a store, not a query. One derivation
+    * pass ([[coSupplyWeighted]], cached for the build only) feeds
+    * every artifact: the p90-cut strong graph (M1–M4), the mutual
+    * top-K sparsifier (M5+ and q_sql_bfs) and the directed top-K
+    * selection graph HITS consumes. The dials (KnnK, the p90 cut) are
+    * in every name, so a dial bump stops resolving the old artifacts
+    * instead of serving them.
     *
-    * Scale: both artifacts are edge lists bounded far below the
-    * corpus — strong = top-decile pairs, kNN ≤ |V|·K/2 rows — so a
-    * single parquet file each is right through very large |V|; at
-    * 100 TB the store write is one-time per corpus state and every
-    * graph query afterwards reads thousands of rows, not terabytes.
-    * Concurrency: SINGLE WRITER per warehouse (the PredStore /
-    * compactStore contract) — concurrent first-builds race the
-    * overwrite; serialize store materialization externally.
+    * Scale: all artifacts are edge lists bounded far below the
+    * corpus — strong = top-decile pairs, kNN ≤ |V|·K/2 rows — so the
+    * store write is one-time per corpus state and every graph query
+    * afterwards reads thousands of rows, not terabytes.
     */
   private[graft] object GraphStore {
     import java.util.concurrent.atomic.AtomicInteger
@@ -117,108 +112,65 @@ object GraphOps {
       * and re-registration paths must not increment it). */
     val buildCount = new AtomicInteger(0)
 
-    private def stem(kind: String, dir: String): String =
-      s"graft_${kind}_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + "_"
+    private val Strong = Store.Artifact(columns = "src BIGINT, dst BIGINT",
+      family = Some("cosup_p90"))
+    private val Knn = Strong.copy(family = Some(s"knng_k$KnnK"))
+    private val KnnDir = Strong.copy(family = Some(s"knngdir_k$KnnK"))
 
-    private def warehousePath(spark: SparkSession, table: String): java.nio.file.Path = {
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      java.nio.file.Paths.get(new java.net.URI(w).getPath).resolve(table)
-    }
+    private val store = new Store(s"graph_p90_k$KnnK", "lineitem", "",
+        Seq(Strong, Knn, KnnDir))((spark, dir, at) => {
+      import org.apache.spark.sql.expressions.Window
+      buildCount.incrementAndGet()
+      val pw = coSupplyWeighted(spark, dir).cache()
+      try {
+        val cut = pw.agg(expr("percentile(w, 0.9)").as("wcut"))
+        // parallel (non-coalesced) writes: the edge tables grow
+        // linearly with SF — a coalesce(1) single-writer funnel is
+        // the one piece of the build that would not survive a 1000×
+        // corpus (the NSW-store lesson, r13 verdict)
+        at.write(pw.crossJoin(broadcast(cut))
+          .filter(col("w") > col("wcut"))
+          .select(col("src").cast("long").as("src"),
+            col("dst").cast("long").as("dst")), Strong)
+        val sym = pw.select(col("src"), col("dst"), col("w"))
+          .union(pw.select(col("dst").as("src"), col("src").as("dst"),
+            col("w")))
+        val byStrength = Window.partitionBy(col("src"))
+          .orderBy(col("w").desc, col("dst").asc)
+        val top = sym.withColumn("rank", row_number().over(byStrength))
+          .filter(col("rank") <= KnnK)
+          .select(col("src"), col("dst"))
+          .cache()
+        at.write(top.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst")), KnnDir)
+        at.write(top
+          .join(top.select(col("dst").as("src"), col("src").as("dst")),
+            Seq("src", "dst"), "left_semi")
+          .filter(col("src") < col("dst"))
+          .select(col("src").cast("long").as("src"),
+            col("dst").cast("long").as("dst")), Knn)
+        top.unpersist()
+      } finally pw.unpersist()
+    })
 
-    private def ensure(spark: SparkSession, dir: String): (String, String, String) = {
-      // fresh: the staleness contract hinges on seeing the corpus NOW
-      val tag = Tables.Probe.corpusTag(spark, s"$dir/lineitem.parquet", fresh = true)
-      // dials are part of the identity (the NswIndex.tableName
-      // pattern): bumping KnnK or the p90 cut changes the stem, so a
-      // persisted artifact built with old dials stops resolving
-      // instead of being silently served stale
-      val tS = stem("cosup_p90", dir) + tag
-      val tK = stem(s"knng_k$KnnK", dir) + tag
-      // r15: third artifact — the DIRECTED top-K selection graph
-      // (pre-mutual), the asymmetric input HITS consumes; one more
-      // bounded |V|*K write off the same cached derivation
-      val tD = stem(s"knngdir_k$KnnK", dir) + tag
-      val locS = warehousePath(spark, tS)
-      val locK = warehousePath(spark, tK)
-      val locD = warehousePath(spark, tD)
-      def registered(n: String) = spark.catalog.tableExists(n)
-      if (!registered(tS) || !registered(tK) || !registered(tD)) {
-        if (java.nio.file.Files.isDirectory(locS) &&
-            java.nio.file.Files.isDirectory(locK) &&
-            java.nio.file.Files.isDirectory(locD)) {
-          // cold session over a built store: metadata-only re-registration
-          Seq(tS -> locS, tK -> locK, tD -> locD).foreach { case (t, loc) =>
-            spark.sql(s"DROP TABLE IF EXISTS $t")
-            spark.sql(
-              s"""CREATE TABLE $t (src BIGINT, dst BIGINT)
-                 |USING PARQUET LOCATION '$loc'""".stripMargin)
-          }
-        } else {
-          import org.apache.spark.sql.expressions.Window
-          buildCount.incrementAndGet()
-          val pw = coSupplyWeighted(spark, dir).cache()
-          try {
-            val cut = pw.agg(expr("percentile(w, 0.9)").as("wcut"))
-            // parallel (non-coalesced) writes: both edge tables grow
-            // linearly with SF — a coalesce(1) single-writer funnel
-            // is the one piece of the build that would not survive a
-            // 1000× corpus (the NSW-store lesson, r13 verdict)
-            pw.crossJoin(broadcast(cut))
-              .filter(col("w") > col("wcut"))
-              .select(col("src").cast("long").as("src"),
-                col("dst").cast("long").as("dst"))
-              .write.option("path", locS.toString)
-              .mode("overwrite").saveAsTable(tS)
-            val sym = pw.select(col("src"), col("dst"), col("w"))
-              .union(pw.select(col("dst").as("src"), col("src").as("dst"),
-                col("w")))
-            val byStrength = Window.partitionBy(col("src"))
-              .orderBy(col("w").desc, col("dst").asc)
-            val top = sym.withColumn("rank", row_number().over(byStrength))
-              .filter(col("rank") <= KnnK)
-              .select(col("src"), col("dst"))
-              .cache()
-            top
-              .select(col("src").cast("long").as("src"),
-                col("dst").cast("long").as("dst"))
-              .write.option("path", locD.toString)
-              .mode("overwrite").saveAsTable(tD)
-            top
-              .join(top.select(col("dst").as("src"), col("src").as("dst")),
-                Seq("src", "dst"), "left_semi")
-              .filter(col("src") < col("dst"))
-              .select(col("src").cast("long").as("src"),
-                col("dst").cast("long").as("dst"))
-              .write.option("path", locK.toString)
-              .mode("overwrite").saveAsTable(tK)
-            top.unpersist()
-          } finally pw.unpersist()
-        }
-      }
-      (tS, tK, tD)
-    }
+    /** Drop catalog entries, keep the on-disk store (cold-session sim). */
+    def deregister(spark: SparkSession, dir: String): Unit =
+      store.deregister(spark, dir)
 
     /** Strong co-supply graph (p90 weight cut), src < dst. Cached:
       * consumers union/join multiple branches of the same edge set;
       * identical plans share one cache entry. */
-    def strong(spark: SparkSession, dir: String): DataFrame = {
-      val (tS, _, _) = ensure(spark, dir)
-      spark.table(tS).cache()
-    }
+    def strong(spark: SparkSession, dir: String): DataFrame =
+      spark.table(store.ensure(spark, dir).table(Strong)).cache()
 
     /** Mutual top-K kNN graph, src < dst, degree ≤ K by construction. */
-    def knn(spark: SparkSession, dir: String): DataFrame = {
-      val (_, tK, _) = ensure(spark, dir)
-      spark.table(tK).cache()
-    }
+    def knn(spark: SparkSession, dir: String): DataFrame =
+      spark.table(store.ensure(spark, dir).table(Knn)).cache()
 
     /** DIRECTED top-K selection graph (pre-mutual), degree-out <= K --
       * the asymmetric edge set M22's HITS consumes. */
-    def knnDirected(spark: SparkSession, dir: String): DataFrame = {
-      val (_, _, tD) = ensure(spark, dir)
-      spark.table(tD).cache()
-    }
+    def knnDirected(spark: SparkSession, dir: String): DataFrame =
+      spark.table(store.ensure(spark, dir).table(KnnDir)).cache()
   }
 
   /** DuckDB mirror of [[mutualKnnPairs]] as a CTE body that, like

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Store, Tables}
 import graft.functions.VectorFunctions
 
 /** Similarity search over the embeddings table (SURVEY.md §2 block D).
@@ -1115,7 +1115,7 @@ object Similarity {
     * scores plus one broadcast-hash probe of the edge table per hop.
     *
     * 100 TB design: the edge table is ≤ 2M·n rows, written once per
-    * corpus state (same staleness contract as IvfIndex/SigStore);
+    * corpus state (a [[graft.Store]]);
     * per-hop the beam (panel-bounded) broadcasts against it. A real
     * single-shard HNSW holds this graph in RAM and descends layers;
     * the flat stored-graph beam search is the distributed analogue —
@@ -1123,7 +1123,6 @@ object Similarity {
     * panel stands in for. The oracle replays the ENTIRE search —
     * entry, every hop, final ranking — from the persisted edges in
     * DuckDB, so the query path is cell-exact, not just recall-bounded.
-    * Single-writer per warehouse (the PredStore contract).
     */
   object NswIndex {
     import java.util.concurrent.atomic.AtomicInteger
@@ -1137,72 +1136,56 @@ object Similarity {
     val buildCount = new AtomicInteger(0)
     val lastLoc = new java.util.concurrent.atomic.AtomicReference[String](null)
 
-    private def tableName(spark: SparkSession, dir: String): String =
-      "graft_nsw_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + "_" + NswM + "_" + NswBuildBands + "_" +
-        Tables.Probe.corpusTag(spark, s"$dir/embeddings.parquet", fresh = true)
+    // bucketed by src (the D3/IVF pattern): the edge table is
+    // corpus-proportional (≈ 2M·|corpus| rows)
+    private val Edges = Store.Artifact(columns = "src BIGINT, dst BIGINT",
+      bucket = Some(("src", IvfIndex.IvfBuckets)))
 
-    private def warehousePath(spark: SparkSession, table: String): java.nio.file.Path = {
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      java.nio.file.Paths.get(new java.net.URI(w).getPath).resolve(table)
-    }
+    private val store = new Store("nsw", "embeddings", s"${NswM}_${NswBuildBands}_",
+        Seq(Edges))((spark, dir, at) => {
+      buildCount.incrementAndGet()
+      val e = Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val bucketed0 = lshBuckets(spark, dir, nBands = NswBuildBands)
+      val hot = bucketed0.groupBy(col("band"), col("bucket"))
+        .agg(count(lit(1)).as("n")).filter(col("n") > AnnBucketCap)
+        .select(col("band").as("hband"), col("bucket").as("hb"))
+      val bucketed = bucketed0.join(broadcast(hot),
+        col("band") === col("hband") && col("bucket") === col("hb"),
+        "left_anti")
+      val cand = bucketed.as("a")
+        .join(bucketed.as("b"),
+          col("a.band") === col("b.band") &&
+            col("a.bucket") === col("b.bucket") &&
+            col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"))
+        .distinct()
+      val sims = cand
+        .join(e.as("x"), col("id1") === col("x.vec_id"))
+        .join(e.as("y"), col("id2") === col("y.vec_id"))
+        .select(col("id1"), col("id2"),
+          VectorFunctions.cosine(col("x.v"), col("y.v")).as("sim"))
+      val sym = sims.select(col("id1").as("src"), col("id2").as("dst"),
+          col("sim"))
+        .union(sims.select(col("id2").as("src"), col("id1").as("dst"),
+          col("sim")))
+      val bySim = Window.partitionBy(col("src"))
+        .orderBy(round(col("sim"), 6).desc, col("dst").asc)
+      val top = sym.withColumn("r", row_number().over(bySim))
+        .filter(col("r") <= NswM).select(col("src"), col("dst"))
+      // symmetric closure: search must be able to walk an edge
+      // from EITHER endpoint even when the pick was one-sided.
+      // Bucketed parallel write: a coalesce(1) single-writer funnel
+      // here is the difference between a one-stage parallel write and
+      // a 10¹⁰-row single-task file at n = 10⁹
+      at.write(top.union(top.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct(), Edges)
+    })
 
     def ensure(spark: SparkSession, dir: String): String = {
-      val t = tableName(spark, dir)
-      val loc = warehousePath(spark, t)
-      if (!spark.catalog.tableExists(t)) {
-        if (java.nio.file.Files.isDirectory(loc)) {
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          spark.sql(
-            s"""CREATE TABLE $t (src BIGINT, dst BIGINT)
-               |USING PARQUET LOCATION '$loc'""".stripMargin)
-        } else {
-          buildCount.incrementAndGet()
-          val e = Tables.embeddings(spark, dir)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          val bucketed0 = lshBuckets(spark, dir, nBands = NswBuildBands)
-          val hot = bucketed0.groupBy(col("band"), col("bucket"))
-            .agg(count(lit(1)).as("n")).filter(col("n") > AnnBucketCap)
-            .select(col("band").as("hband"), col("bucket").as("hb"))
-          val bucketed = bucketed0.join(broadcast(hot),
-            col("band") === col("hband") && col("bucket") === col("hb"),
-            "left_anti")
-          val cand = bucketed.as("a")
-            .join(bucketed.as("b"),
-              col("a.band") === col("b.band") &&
-                col("a.bucket") === col("b.bucket") &&
-                col("a.vec_id") < col("b.vec_id"))
-            .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"))
-            .distinct()
-          val sims = cand
-            .join(e.as("x"), col("id1") === col("x.vec_id"))
-            .join(e.as("y"), col("id2") === col("y.vec_id"))
-            .select(col("id1"), col("id2"),
-              VectorFunctions.cosine(col("x.v"), col("y.v")).as("sim"))
-          val sym = sims.select(col("id1").as("src"), col("id2").as("dst"),
-              col("sim"))
-            .union(sims.select(col("id2").as("src"), col("id1").as("dst"),
-              col("sim")))
-          val bySim = Window.partitionBy(col("src"))
-            .orderBy(round(col("sim"), 6).desc, col("dst").asc)
-          val top = sym.withColumn("r", row_number().over(bySim))
-            .filter(col("r") <= NswM).select(col("src"), col("dst"))
-          // symmetric closure: search must be able to walk an edge
-          // from EITHER endpoint even when the pick was one-sided.
-          // Bucketed parallel write (the D3/IVF pattern): the edge
-          // table is corpus-proportional (≈ 2M·|corpus| rows) — a
-          // coalesce(1) single-writer funnel here is the difference
-          // between a one-stage parallel write and a 10¹⁰-row
-          // single-task file at n = 10⁹
-          top.union(top.select(col("dst").as("src"), col("src").as("dst")))
-            .distinct()
-            .write.bucketBy(IvfIndex.IvfBuckets, "src")
-            .option("path", loc.toString)
-            .mode("overwrite").saveAsTable(t)
-        }
-      }
-      lastLoc.set(loc.toString)
-      t
+      val at = store.ensure(spark, dir)
+      lastLoc.set(at.path(Edges))
+      at.table(Edges)
     }
   }
 
@@ -1428,14 +1411,12 @@ object Similarity {
     * sf0.1; rounds 2-3 memoized the model but still rebuilt the
     * assignment per JVM).
     *
-    * Durability with the in-memory catalog: table METADATA dies with
-    * the session, but the external-table files survive — a cold
-    * session re-registers the identical DDL over the existing location
-    * (no fit, no transform, no scan of the corpus). Bucketing by cell
-    * means the probe→cell join reads only matching buckets'
-    * partitions and the corpus side arrives pre-shuffled — at 100 TB
-    * the assignment is exactly the write-once bucketed table a vector
-    * warehouse ships.
+    * A [[graft.Store]] per nlist (a cold session re-registers the
+    * declared DDL: no fit, no transform, no scan of the corpus).
+    * Bucketing by cell means the probe→cell join reads only matching
+    * buckets' partitions and the corpus side arrives pre-shuffled — at
+    * 100 TB the assignment is exactly the write-once bucketed table a
+    * vector warehouse ships.
     */
   object IvfIndex {
     import org.apache.spark.ml.clustering.KMeans
@@ -1456,137 +1437,72 @@ object Similarity {
       */
     val lastLoc = new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
 
-    /** Norm-augmentation dir of the most recently ensured index — the
-      * nlist-row (cell, mn) table persisted WITH the index (r16 verdict
-      * ask #1: the per-cell max norm is index STATE computed at build
-      * time, never a per-query corpus aggregate).
-      */
-    val lastNormLoc = new java.util.concurrent.atomic.AtomicReference[String](null)
+    private val Asg = Store.Artifact(columns = "vec_id BIGINT, v ARRAY<DOUBLE>, cell INT",
+      bucket = Some(("cell", IvfBuckets)))
+    private val Cent = Store.Artifact("_cent", "cell INT, cv ARRAY<DOUBLE>")
+    /** The nlist-row (cell, mn) norm augmentation, persisted WITH the
+      * index (r16 verdict ask #1: the per-cell max norm is index STATE
+      * computed at build time, never a per-query corpus aggregate). */
+    private val Norm = Store.Artifact("_norm", "cell INT, mn DOUBLE")
 
-    /** The corpus fingerprint is part of the index identity (same
-      * staleness contract as [[graft.operators.Dedup.SigStore]]): a
-      * mutated corpus changes the name, the stale name stops
-      * resolving, and `ensure` refits over the current corpus.
-      */
-    private def stem(dir: String, nlist: Int): String =
-      "graft_ivf_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + "_" + nlist + "_"
-
-    private def tableName(spark: SparkSession, dir: String, nlist: Int): String =
-      // fresh: the staleness contract hinges on seeing the corpus NOW
-      stem(dir, nlist) +
-        Tables.Probe.corpusTag(spark, s"$dir/embeddings.parquet", fresh = true)
-
-    private def warehousePath(spark: SparkSession, table: String): java.nio.file.Path = {
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      java.nio.file.Paths.get(new java.net.URI(w).getPath).resolve(table)
-    }
-
-    /** Register-or-build: prefer catalog, then on-disk files, then a
-      * fresh fit + external bucketed write.
-      */
-    private def ensure(spark: SparkSession, dir: String, nlist: Int): (String, String) = {
-      val t = tableName(spark, dir, nlist)
-      val tc = t + "_cent"
-      val tn = t + "_norm"
-      val loc = warehousePath(spark, t)
-      val locC = warehousePath(spark, tc)
-      val locN = warehousePath(spark, tn)
-      def registered(n: String) = spark.catalog.tableExists(n)
-      if (!registered(t) || !registered(tc) || !registered(tn)) {
-        if (java.nio.file.Files.isDirectory(loc) && java.nio.file.Files.isDirectory(locC)) {
-          // cold session over a built index: metadata-only re-registration
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          spark.sql(s"DROP TABLE IF EXISTS $tc")
-          spark.sql(s"DROP TABLE IF EXISTS $tn")
-          spark.sql(
-            s"""CREATE TABLE $t (vec_id BIGINT, v ARRAY<DOUBLE>, cell INT)
-               |USING PARQUET CLUSTERED BY (cell) INTO $IvfBuckets BUCKETS
-               |LOCATION '$loc'""".stripMargin)
-          spark.sql(
-            s"""CREATE TABLE $tc (cell INT, cv ARRAY<DOUBLE>)
-               |USING PARQUET LOCATION '$locC'""".stripMargin)
-          if (java.nio.file.Files.isDirectory(locN))
-            spark.sql(
-              s"""CREATE TABLE $tn (cell INT, mn DOUBLE)
-                 |USING PARQUET LOCATION '$locN'""".stripMargin)
-          else
-            // pre-augmentation on-disk index: upgrade in place — one
-            // assignment pass HERE (build/maintenance time), so query
-            // time stays an nlist-row read
-            writeNorms(spark, t, tn, locN)
-        } else {
-          import org.apache.spark.ml.feature.Normalizer
-          val e = Tables.embeddings(spark, dir)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          // spherical k-means: fit/assign on L2-normalized vectors so
-          // the euclidean cell geometry matches the cosine ground truth
-          // (cosine(a,b) = 1 - ||â-b̂||²/2); probing by cosine against
-          // normalized-space centroids is consistent with assignment
-          val feat = new Normalizer().setInputCol("features0")
-            .setOutputCol("features").setP(2.0)
-            .transform(e.withColumn("features0", array_to_vector(col("v"))))
-          fitCount.incrementAndGet()
-          val model = new KMeans().setK(nlist).setSeed(13).setMaxIter(10).fit(feat)
-          model.transform(feat)
-            .select(col("vec_id").cast("long").as("vec_id"), col("v"),
-              col("prediction").cast("int").as("cell"))
-            .write.bucketBy(IvfBuckets, "cell")
-            .option("path", loc.toString).mode("overwrite").saveAsTable(t)
-          val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-            (i, c.toArray.toSeq)
-          }
-          spark.createDataFrame(centroids.toSeq).toDF("cell", "cv")
-            .coalesce(1).write.option("path", locC.toString)
-            .mode("overwrite").saveAsTable(tc)
-          // the ‖v‖ augmentation is part of the index: ONE map-side-
-          // combined pass over the just-written assignment at build
-          // time (r16 verdict ask #1 — a per-query recompute of this
-          // is a corpus-scale scan per call at 100 TB)
-          writeNorms(spark, t, tn, locN)
-        }
+    private def store(nlist: Int) = new Store("ivf", "embeddings", s"${nlist}_",
+        Seq(Asg, Cent, Norm))((spark, dir, at) => {
+      import org.apache.spark.ml.feature.Normalizer
+      val e = Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      // spherical k-means: fit/assign on L2-normalized vectors so
+      // the euclidean cell geometry matches the cosine ground truth
+      // (cosine(a,b) = 1 - ||â-b̂||²/2); probing by cosine against
+      // normalized-space centroids is consistent with assignment
+      val feat = new Normalizer().setInputCol("features0")
+        .setOutputCol("features").setP(2.0)
+        .transform(e.withColumn("features0", array_to_vector(col("v"))))
+      fitCount.incrementAndGet()
+      val model = new KMeans().setK(nlist).setSeed(13).setMaxIter(10).fit(feat)
+      at.write(model.transform(feat)
+        .select(col("vec_id").cast("long").as("vec_id"), col("v"),
+          col("prediction").cast("int").as("cell")), Asg)
+      val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
+        (i, c.toArray.toSeq)
       }
-      lastLoc.set((loc.toString, locC.toString))
-      lastNormLoc.set(locN.toString)
-      (t, tc)
-    }
-
-    /** Per-cell max vector norm, 6-dp-rounded BEFORE the max so the
-      * probe key is the identical double in both engines (the D24
-      * device); persisted as an nlist-row table next to the centroids.
-      */
-    private def writeNorms(spark: SparkSession, t: String, tn: String,
-        locN: java.nio.file.Path): Unit =
-      spark.table(t).groupBy(col("cell"))
+      at.write(spark.createDataFrame(centroids.toSeq).toDF("cell", "cv")
+        .coalesce(1), Cent)
+      // per-cell max vector norm, 6-dp-rounded BEFORE the max so the
+      // probe key is the identical double in both engines (the D24
+      // device): ONE map-side-combined pass over the just-written
+      // assignment at build time — a per-query recompute is a
+      // corpus-scale scan per call at 100 TB
+      at.write(spark.table(at.table(Asg)).groupBy(col("cell"))
         .agg(max(round(VectorFunctions.norm2(col("v")), 6)).as("mn"))
-        .coalesce(1).write.option("path", locN.toString)
-        .mode("overwrite").saveAsTable(tn)
+        .coalesce(1), Norm)
+    })
+
+    private def ensure(spark: SparkSession, dir: String, nlist: Int): Store#At = {
+      val at = store(nlist).ensure(spark, dir)
+      lastLoc.set((at.path(Asg), at.path(Cent)))
+      at
+    }
 
     /** The persisted (cell, mn) norm-augmentation table — nlist rows. */
-    def norms(spark: SparkSession, dir: String, nlist: Int): DataFrame = {
-      val (t, _) = ensure(spark, dir, nlist)
-      spark.table(t + "_norm")
-    }
+    def norms(spark: SparkSession, dir: String, nlist: Int): DataFrame =
+      spark.table(ensure(spark, dir, nlist).table(Norm))
 
     /** (assigned corpus: vec_id, v, cell; centroids: cell, cv) */
     def get(spark: SparkSession, dir: String, nlist: Int): (DataFrame, DataFrame) = {
-      val (t, tc) = ensure(spark, dir, nlist)
+      val at = ensure(spark, dir, nlist)
       // cache the (small relative to the corpus) assignment for the
       // repeated probe/scan consumers within a session; materialize
       // before fan-out so AQE stages don't race a cold cache
-      val assigned = spark.table(t).cache()
+      val assigned = spark.table(at.table(Asg)).cache()
       assigned.count()
-      (assigned, spark.table(tc))
+      (assigned, spark.table(at.table(Cent)))
     }
 
     /** Drop the catalog entries but keep the on-disk index (external
       * tables) — simulates a cold session for specs.
       */
     def deregister(spark: SparkSession, dir: String, nlist: Int): Unit =
-      // every fingerprint variant under the stem — see SigStore.deregister
-      Tables.dropTablesMatching(spark,
-        (java.util.regex.Pattern.quote(stem(dir, nlist).toLowerCase) +
-          "[0-9a-f]+(_cent|_norm)?").r)
+      store(nlist).deregister(spark, dir)
 
     /** Absorb an arriving vector batch INTO the index: nearest-centroid
       * assignment against the persisted centroids ([[assignVectors]] —
@@ -1602,24 +1518,21 @@ object Similarity {
         nlist: Int = 16): Long = {
       val assigned = assignVectors(spark, dir, batch, nlist).cache()
       val n = assigned.count()
-      val (t, _) = ensure(spark, dir, nlist)
+      val at = ensure(spark, dir, nlist)
+      val t = at.table(Asg)
       assigned.write.mode("append").insertInto(t)
       // keep the norm augmentation true under growth: merge the BATCH's
       // per-cell maxima into the persisted table — a batch-sized
       // aggregate folded onto nlist rows (collect is the bounded-verdict
       // device: ≤ nlist rows, and the read must complete before the
       // same-location overwrite)
-      val tn = t + "_norm"
-      val locN = warehousePath(spark, tn)
-      val merged = spark.table(tn)
+      val merged = spark.table(at.table(Norm))
         .unionByName(assigned.groupBy(col("cell"))
           .agg(max(round(VectorFunctions.norm2(col("v")), 6)).as("mn")))
         .groupBy(col("cell")).agg(max(col("mn")).as("mn"))
         .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
       assigned.unpersist()
-      spark.createDataFrame(merged).toDF("cell", "mn")
-        .coalesce(1).write.option("path", locN.toString)
-        .mode("overwrite").saveAsTable(tn)
+      at.write(spark.createDataFrame(merged).toDF("cell", "mn").coalesce(1), Norm)
       // the get() path caches the table — must not serve the pre-append
       // snapshot
       spark.catalog.refreshTable(t)
@@ -1627,40 +1540,13 @@ object Similarity {
     }
 
     /** Compact the assignment table back to one data file per bucket
-      * after a run of [[absorb]]s, preserving the cell bucket spec (the
-      * probe→cell bucket pruning must survive maintenance). Same
-      * staging-rewrite + file-swap + DDL re-register mechanics as
-      * [[graft.operators.Dedup.SigStore.compactStore]] — and the same
-      * SINGLE-WRITER concurrency contract: the swap window is not
-      * atomic, a concurrent absorb landing inside it is lost, so
-      * compaction runs with the index quiescent; the serialized
-      * absorb -> compact cycle is the supported (and spec-proven
-      * repeatable) schedule. Pure layout rewrite — no fit
-      * ([[fitCount]] spec-pinned across it). Returns the data-file
-      * count after compaction.
+      * after a run of [[absorb]]s ([[graft.Store.compact]]), preserving
+      * the cell bucket spec the probe→cell bucket pruning needs. Pure
+      * layout rewrite — no fit ([[fitCount]] spec-pinned across it).
+      * Returns the data-file count after compaction.
       */
-    def compactStore(spark: SparkSession, dir: String, nlist: Int = 16): Int = {
-      val (t, _) = ensure(spark, dir, nlist)
-      val staging = t + "_compacting"
-      val loc = warehousePath(spark, t)
-      val locS = warehousePath(spark, staging)
-      // path read, not catalog read — see SigStore.compactStore: the
-      // bucketed-table scan's advertised partitioning elides the
-      // repartition and multiplies output files per read split
-      spark.read.parquet(loc.toString)
-        .repartition(IvfBuckets, col("cell"))
-        .write.bucketBy(IvfBuckets, "cell")
-        .option("path", locS.toString).mode("overwrite").saveAsTable(staging)
-      spark.sql(s"DROP TABLE IF EXISTS $staging") // metadata only; files stay
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      graft.operators.Dedup.deleteRecursively(loc)
-      java.nio.file.Files.move(locS, loc)
-      spark.sql(
-        s"""CREATE TABLE $t (vec_id BIGINT, v ARRAY<DOUBLE>, cell INT)
-           |USING PARQUET CLUSTERED BY (cell) INTO $IvfBuckets BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      graft.operators.Dedup.dataFileCount(loc)
-    }
+    def compactStore(spark: SparkSession, dir: String, nlist: Int = 16): Int =
+      store(nlist).compact(spark, ensure(spark, dir, nlist), Asg)
   }
 
   // ---------------------------------------------------------------- D6
@@ -1705,9 +1591,7 @@ object Similarity {
     * as M one-byte-class code ids — 8 small ints instead of 64 floats,
     * the 32× memory compression that lets a 100 TB vector corpus keep
     * its search structure in RAM. Codebooks (tiny) and codes (narrow)
-    * persist as external tables with the same corpus-fingerprint
-    * staleness + cold-session re-registration contract as
-    * [[IvfIndex]]. Vectors are L2-normalized before fit/encode so
+    * persist as the external tables of a [[graft.Store]]. Vectors are L2-normalized before fit/encode so
     * inner-product ADC matches the cosine ground truth.
     */
   object PqIndex {
@@ -1727,86 +1611,55 @@ object Similarity {
       */
     val lastLoc = new java.util.concurrent.atomic.AtomicReference[(String, String)](null)
 
-    private def stem(dir: String): String =
-      "graft_pq_" + dir.replaceAll("[^a-zA-Z0-9]+", "_")
-        .stripPrefix("_").stripSuffix("_") + s"_${PqM}x${PqK}_"
-
-    private def tableName(spark: SparkSession, dir: String): String =
-      // fresh: the staleness contract hinges on seeing the corpus NOW
-      stem(dir) +
-        Tables.Probe.corpusTag(spark, s"$dir/embeddings.parquet", fresh = true)
-
-    private def warehousePath(spark: SparkSession, table: String): java.nio.file.Path = {
-      val w = spark.conf.get("spark.sql.warehouse.dir")
-      java.nio.file.Paths.get(new java.net.URI(w).getPath).resolve(table)
-    }
-
     private[operators] def normalized(spark: SparkSession, dir: String): DataFrame =
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v0"))
         .select(col("vec_id"), transform(col("v0"), x =>
           x / sqrt(aggregate(col("v0"), lit(0.0), (a, y) => a + y * y))).as("v"))
 
-    private def ensure(spark: SparkSession, dir: String): (String, String) = {
-      val t = tableName(spark, dir)         // codes
-      val tb = t + "_book"                  // codebooks
-      val loc = warehousePath(spark, t)
-      val locB = warehousePath(spark, tb)
-      def registered(n: String) = spark.catalog.tableExists(n)
-      if (!registered(t) || !registered(tb)) {
-        if (java.nio.file.Files.isDirectory(loc) && java.nio.file.Files.isDirectory(locB)) {
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          spark.sql(s"DROP TABLE IF EXISTS $tb")
-          val codeCols = (0 until PqM).map(m => s"c$m INT").mkString(", ")
-          spark.sql(s"CREATE TABLE $t (vec_id BIGINT, $codeCols) USING PARQUET LOCATION '$loc'")
-          spark.sql(s"CREATE TABLE $tb (m INT, code INT, cv ARRAY<DOUBLE>) USING PARQUET LOCATION '$locB'")
-        } else {
-          val base = normalized(spark, dir).cache()
-          base.count()
-          // one seeded fit per subspace; each fit sees only its 8-dim
-          // slice. M model objects live on the driver (tiny); encoding
-          // runs as M chained transforms over one cached scan.
-          val models = (0 until PqM).map { m =>
-            fitCount.incrementAndGet()
-            val sub = base.select(col("vec_id"),
-              array_to_vector(slice(col("v"), m * PqSubDim + 1, PqSubDim)).as("features"))
-            new KMeans().setK(PqK).setSeed(13L + m).setMaxIter(10).fit(sub)
-          }
-          val encoded = models.zipWithIndex.foldLeft(base: DataFrame) {
-            case (df, (model, m)) =>
-              model.setPredictionCol(s"c$m").setFeaturesCol(s"f$m")
-                .transform(df.withColumn(s"f$m",
-                  array_to_vector(slice(col("v"), m * PqSubDim + 1, PqSubDim))))
-                .drop(s"f$m")
-          }
-          encoded.select((col("vec_id") +:
-              (0 until PqM).map(m => col(s"c$m").cast("int").as(s"c$m"))): _*)
-            .write.option("path", loc.toString).mode("overwrite").saveAsTable(t)
-          val rows = for {
-            (model, m) <- models.zipWithIndex
-            (c, code) <- model.clusterCenters.zipWithIndex
-          } yield (m, code, c.toArray.toSeq)
-          spark.createDataFrame(rows).toDF("m", "code", "cv")
-            .coalesce(1).write.option("path", locB.toString)
-            .mode("overwrite").saveAsTable(tb)
-          base.unpersist()
-        }
+    private val Codes = Store.Artifact(
+      columns = "vec_id BIGINT, " + (0 until PqM).map(m => s"c$m INT").mkString(", "))
+    private val Books = Store.Artifact("_book", "m INT, code INT, cv ARRAY<DOUBLE>")
+
+    private val store = new Store("pq", "embeddings", s"${PqM}x${PqK}_",
+        Seq(Codes, Books))((spark, dir, at) => {
+      val base = normalized(spark, dir).cache()
+      base.count()
+      // one seeded fit per subspace; each fit sees only its 8-dim
+      // slice. M model objects live on the driver (tiny); encoding
+      // runs as M chained transforms over one cached scan.
+      val models = (0 until PqM).map { m =>
+        fitCount.incrementAndGet()
+        val sub = base.select(col("vec_id"),
+          array_to_vector(slice(col("v"), m * PqSubDim + 1, PqSubDim)).as("features"))
+        new KMeans().setK(PqK).setSeed(13L + m).setMaxIter(10).fit(sub)
       }
-      lastLoc.set((loc.toString, locB.toString))
-      (t, tb)
-    }
+      val encoded = models.zipWithIndex.foldLeft(base: DataFrame) {
+        case (df, (model, m)) =>
+          model.setPredictionCol(s"c$m").setFeaturesCol(s"f$m")
+            .transform(df.withColumn(s"f$m",
+              array_to_vector(slice(col("v"), m * PqSubDim + 1, PqSubDim))))
+            .drop(s"f$m")
+      }
+      at.write(encoded.select((col("vec_id") +:
+        (0 until PqM).map(m => col(s"c$m").cast("int").as(s"c$m"))): _*), Codes)
+      val rows = for {
+        (model, m) <- models.zipWithIndex
+        (c, code) <- model.clusterCenters.zipWithIndex
+      } yield (m, code, c.toArray.toSeq)
+      at.write(spark.createDataFrame(rows).toDF("m", "code", "cv").coalesce(1), Books)
+      base.unpersist()
+    })
 
     /** (codes: vec_id, c0..c7; codebooks: m, code, cv) */
     def get(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-      val (t, tb) = ensure(spark, dir)
-      (spark.table(t), spark.table(tb))
+      val at = store.ensure(spark, dir)
+      lastLoc.set((at.path(Codes), at.path(Books)))
+      (spark.table(at.table(Codes)), spark.table(at.table(Books)))
     }
 
     def deregister(spark: SparkSession, dir: String): Unit =
-      // every fingerprint variant under the stem — see SigStore.deregister
-      Tables.dropTablesMatching(spark,
-        (java.util.regex.Pattern.quote(stem(dir).toLowerCase) +
-          "[0-9a-f]+(_book)?").r)
+      store.deregister(spark, dir)
   }
 
   /** PQ ANN ([r]): asymmetric-distance (ADC) search over the

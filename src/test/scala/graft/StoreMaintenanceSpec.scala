@@ -10,7 +10,9 @@ import graft.operators.{Dedup, Similarity}
   * count grows per absorb, and `compactStore` restores the
   * one-file-per-bucket layout WITHOUT recomputing anything — build
   * and fit counters stay pinned, results stay bit-identical, and a
-  * cold session re-registers over the compacted files.
+  * cold session re-registers over the compacted files with the DDL the
+  * build registered. Crash safety of the [[Store]] device: a build that
+  * dies before its commit marker is rebuilt, never served.
   *
   * Runs against a PRIVATE copy of the smallest corpus: absorbing into
   * the shared test-corpus stores would contaminate the oracle-checked
@@ -31,13 +33,84 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     d.toString
   }
 
-  test("SigStore: absorb grows the store (later batches match absorbed docs); compact restores one-file-per-bucket, build pinned") {
+  /** Catalog schema and bucket spec of every table `df` reads — the DDL
+    * parity observable (a build and a cold re-registration must agree).
+    */
+  private def ddl(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.catalogTable.map(c => (c.identifier.table, c.schema, c.bucketSpec))
+    }.flatten
+
+  private def warehouse: java.nio.file.Path = java.nio.file.Paths.get(
+    new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
+
+  test("Store: a build that dies before its marker is rebuilt by the next ensure, never served") {
+    val dir = privateCorpus("region.parquet")
+    val A = Store.Artifact(columns = "id BIGINT")
+    val B = Store.Artifact("_b", "id BIGINT")
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    // attempt 1 dies after artifact 1, attempt 2 after both artifacts
+    // (before the commit), attempt 3 finishes; artifact 1 carries the
+    // attempt number so a served leftover is visible
+    val store = new Store("stubcrash", "region", "", Seq(A, B))((s, _, at) => {
+      val n = builds.incrementAndGet()
+      at.write(s.range(10L * n, 10L * n + 3).toDF("id"), A)
+      if (n == 1) throw new IllegalStateException("build died after artifact 1")
+      at.write(s.range(3).toDF("id"), B)
+      if (n == 2) throw new IllegalStateException("build died before its marker")
+    })
+    intercept[IllegalStateException](store.ensure(spark, dir))
+    intercept[IllegalStateException](store.ensure(spark, dir))
+    assert(builds.get == 2, "a build that never wrote its marker must run again")
+    val at = store.ensure(spark, dir)
+    assert(builds.get == 3, "a build that never wrote its marker must run again")
+    def rowsA(t: String) = spark.table(t).as[Long].collect().sorted.toSeq
+    assert(rowsA(at.table(A)) == Seq(30L, 31L, 32L),
+      "an artifact of a failed build was served")
+    assert(spark.table(at.table(B)).count() == 3)
+    // a cold session over the committed store re-registers, no build
+    store.deregister(spark, dir)
+    assert(!spark.catalog.tableExists(at.table(A)))
+    val cold = store.ensure(spark, dir)
+    assert(builds.get == 3, "a committed store must re-register, not rebuild")
+    assert(rowsA(cold.table(A)) == Seq(30L, 31L, 32L))
+  }
+
+  test("SigStore: a sig dir left holding only _temporary (no data files, no marker) is rebuilt, not served empty") {
     val dir = privateCorpus("documents.parquet")
     val (t, _) = Dedup.SigStore.ensure(spark, dir)
+    def rowHash(): (Long, java.math.BigDecimal) = {
+      val df = spark.table(t)
+      val r = df.select(count(lit(1)),
+        sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)"))).head()
+      (r.getLong(0), r.getDecimal(1))
+    }
+    val h0 = rowHash()
+    assert(h0._1 > 0)
     val builds = Dedup.SigStore.buildCount.get
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, t)
-    val files0 = Dedup.dataFileCount(loc)
+    // what a writer that died mid-job leaves behind, in a later session
+    Dedup.SigStore.deregister(spark, dir)
+    spark.catalog.clearCache()
+    val loc = warehouse.resolve(t)
+    Store.deleteRecursively(loc)
+    java.nio.file.Files.createDirectories(loc.resolve("_temporary").resolve("0"))
+    java.nio.file.Files.deleteIfExists(warehouse.resolve(t + "._DONE"))
+    Dedup.SigStore.ensure(spark, dir)
+    assert(Dedup.SigStore.buildCount.get == builds + 1,
+      "an unfinished store must be rebuilt")
+    assert(rowHash() == h0, "rebuilt store differs from the original build")
+  }
+
+  test("SigStore: absorb grows the store (later batches match absorbed docs); compact restores one-file-per-bucket, build pinned") {
+    val dir = privateCorpus("documents.parquet")
+    val (t, th) = Dedup.SigStore.ensure(spark, dir)
+    val builds = Dedup.SigStore.buildCount.get
+    val loc = warehouse.resolve(t)
+    val files0 = Store.dataFileCount(loc)
+    def sigDdl() = Seq(t, th).flatMap(n => ddl(spark.table(n)))
+    val ddlBuilt = sigDdl()
+    assert(ddlBuilt.head._3.isDefined, "the signature table must be bucketed")
 
     // two stored docs with live signatures, their texts as absorb payloads
     val stored = spark.table(t).select("doc_id").as[Long].collect().sorted.take(2)
@@ -54,7 +127,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       Seq((1000002L, texts(stored(1)))).toDF("doc_id", "text"))
     assert(n1 == 1 && n2 == 1, s"absorbs signed ($n1, $n2) rows, expected 1 each")
     assert(Dedup.SigStore.buildCount.get == builds, "absorb must never rebuild")
-    val filesGrown = Dedup.dataFileCount(loc)
+    val filesGrown = Store.dataFileCount(loc)
     assert(filesGrown > files0,
       s"append must land new bucket files ($files0 -> $filesGrown)")
 
@@ -83,6 +156,7 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     assert(probe() == matches, "cold session over compacted store diverged")
     assert(Dedup.SigStore.buildCount.get == builds,
       "cold re-register after compaction must not rebuild")
+    assert(sigDdl() == ddlBuilt, "re-registered DDL differs from the built tables")
 
     // SECOND maintenance cycle — the documented single-writer schedule
     // (absorb* → compact, strictly serialized) must be REPEATABLE:
@@ -108,8 +182,13 @@ class StoreMaintenanceSpec extends AnyFunSuite {
   test("IvfIndex: absorb assigns new vectors to frozen cells; compact preserves bucketing, fit pinned") {
     val dir = privateCorpus("embeddings.parquet")
     val nlist = 16
-    val (asg0, _) = Similarity.IvfIndex.get(spark, dir, nlist)
+    val (asg0, cent0) = Similarity.IvfIndex.get(spark, dir, nlist)
     val n0 = asg0.count()
+    def ivfDdl(asg: org.apache.spark.sql.DataFrame, cent: org.apache.spark.sql.DataFrame) =
+      ddl(asg) ++ ddl(cent) ++ ddl(Similarity.IvfIndex.norms(spark, dir, nlist))
+    val ddlBuilt = ivfDdl(asg0, cent0)
+    assert(ddlBuilt.length == 3 && ddlBuilt.head._3.isDefined,
+      "expected the bucketed assignment, centroid and norm tables")
     val persisted = asg0.select("vec_id", "cell").as[(Long, Int)].collect().toMap
     val fits = Similarity.IvfIndex.fitCount.get
 
@@ -172,8 +251,9 @@ class StoreMaintenanceSpec extends AnyFunSuite {
 
     // cold session over the compacted index: re-register, no refit
     Similarity.IvfIndex.deregister(spark, dir, nlist)
-    val (asg3, _) = Similarity.IvfIndex.get(spark, dir, nlist)
+    val (asg3, cent3) = Similarity.IvfIndex.get(spark, dir, nlist)
     assert(asg3.count() == n0 + 11)
+    assert(ivfDdl(asg3, cent3) == ddlBuilt, "re-registered DDL differs from the built tables")
     assert(Similarity.IvfIndex.fitCount.get == fits,
       "cold re-register after compaction must not refit")
 
@@ -216,23 +296,19 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       "second graph must not rebuild — one derivation pass feeds both")
 
     // cold session over a built store: metadata-only re-registration
-    val san = dir.replaceAll("[^a-zA-Z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
+    def graphDdl() = Seq(GraphOps.GraphStore.strong(spark, dir),
+      GraphOps.GraphStore.knn(spark, dir),
+      GraphOps.GraphStore.knnDirected(spark, dir)).flatMap(ddl)
+    val ddlBuilt = graphDdl()
+    assert(ddlBuilt.length == 3)
     spark.catalog.clearCache()
-    // stems carry the dials (KnnK / p90 cut) since r14 — the staleness
-    // contract extends to dial bumps, not just corpus mutation
-    Seq(s"graft_knng_k${GraphOps.KnnK}_${san}_",
-        s"graft_knngdir_k${GraphOps.KnnK}_${san}_",
-        s"graft_cosup_p90_${san}_").foreach { pre =>
-      spark.sql("SHOW TABLES").select("tableName").as[String].collect()
-        .filter(_.startsWith(pre))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+    GraphOps.GraphStore.deregister(spark, dir)
     val knnCold = GraphOps.GraphStore.knn(spark, dir)
       .as[(Long, Long)].collect().sorted
     assert(knnCold.toSeq == knn.toSeq, "re-registered store must be bit-identical")
     assert(GraphOps.GraphStore.buildCount.get == b0 + 1,
       "cold re-register must not rebuild")
+    assert(graphDdl() == ddlBuilt, "re-registered DDL differs from the built tables")
 
     // corpus mutation (mtime change flips the fingerprint) → rebuild,
     // and the rebuild over identical data is deterministic
