@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.CommandResultExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions.col
 
 /** A persisted store: artifacts derived from one corpus table, built once
@@ -34,9 +37,9 @@ import org.apache.spark.sql.functions.col
   * Single writer. `ensure`'s check-then-build is crash-safe but not
   * concurrency-safe: two sessions sharing a warehouse can both miss the
   * marker and race the build. Absorbs (parquet appends) are safe against
-  * each other, but [[compact]] needs the store quiescent: between
-  * dropping and deleting the old files and moving the staged ones into
-  * place the location is empty, so a concurrent reader misses the table
+  * each other, but [[compact]] and [[replace]] need the store quiescent:
+  * between dropping and deleting the old files and moving the staged ones
+  * into place the location is empty, so a concurrent reader misses the table
   * and a concurrent append landing in that window is lost. That is the
   * maintenance-window contract of every table format without a
   * transaction log; serialize builds and `absorb* → compact` cycles per
@@ -79,18 +82,30 @@ final class Store(family: String, source: String, dials: String,
         java.util.regex.Pattern.quote(a.suffix.toLowerCase) + ")"
     }.mkString("|").r)
 
+  /** Append `df` to the table artifact `a`; returns the rows written, read
+    * from the write's own metrics, so `df` is computed once and never
+    * cached or counted.
+    */
+  def append(spark: SparkSession, at: Store#At, a: Artifact, df: DataFrame): Long = {
+    val v = "graft_append_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    df.createOrReplaceTempView(v)
+    try {
+      val done = spark.sql(s"INSERT INTO ${at.table(a)} SELECT * FROM $v")
+      PlanWalk.collectFirst(done.queryExecution.executedPlan) {
+        case c: CommandResultExec => PlanWalk.collectFirst(c.commandPhysicalPlan) {
+          case w: DataWritingCommandExec => w.metrics("numOutputRows").value
+        }.get
+      }.get
+    } finally spark.catalog.dropTempView(v)
+  }
+
   /** Rewrite the bucketed artifact `a` to one data file per bucket, keeping
-    * its bucket spec; no recompute. The rewrite goes through a staging
-    * table, then the staged files replace the old ones and the declared DDL
-    * is registered again (see the class doc for the non-atomic window).
-    * Returns the data-file count afterwards (empty buckets write no file).
+    * its bucket spec; no recompute ([[replace]] over the artifact's own
+    * files). Returns the data-file count afterwards (empty buckets write
+    * no file).
     */
   def compact(spark: SparkSession, at: Store#At, a: Artifact): Int = {
     val (bucketCol, buckets) = a.bucket.get
-    val t = at.table(a)
-    val loc = at.dir(a)
-    val staging = t + "_compacting"
-    val locS = at.warehouse.resolve(staging)
     // read the FILES as a plain parquet path, not via the catalog table:
     // a bucketed-table scan advertises the bucket partitioning, the planner
     // then elides the repartition as redundant, and the write runs over
@@ -99,16 +114,31 @@ final class Store(family: String, source: String, dials: String,
     // claims no partitioning, the repartition survives (it shares the
     // bucket writer's murmur3 hash), each task holds exactly one bucket,
     // and the write lands one file per bucket.
-    spark.read.parquet(loc.toString)
-      .repartition(buckets, col(bucketCol))
-      .write.bucketBy(buckets, bucketCol)
-      .option("path", locS.toString).mode("overwrite").saveAsTable(staging)
+    replace(spark, at, a,
+      spark.read.parquet(at.path(a)).repartition(buckets, col(bucketCol)))
+    dataFileCount(at.dir(a))
+  }
+
+  /** Replace the rows of the committed artifact `a` with `df`. The rows
+    * are written to a staging table first; only then do the staged files
+    * replace the old ones and the declared DDL is registered again. A
+    * failure before the swap leaves the committed artifact whole, and a
+    * failure inside it leaves the non-atomic window of the class doc.
+    */
+  def replace(spark: SparkSession, at: Store#At, a: Artifact, df: DataFrame): Unit = {
+    val t = at.table(a)
+    val loc = at.dir(a)
+    val staging = t + "_staging"
+    val locS = at.warehouse.resolve(staging)
+    deleteRecursively(locS)
+    at.write(df, a, staging, locS.toString)
+    if (crashAfterStaging.compareAndSet(true, false))
+      throw new IllegalStateException(s"injected crash after staging $t")
     spark.sql(s"DROP TABLE IF EXISTS $staging") // metadata only; files stay
     spark.sql(s"DROP TABLE IF EXISTS $t")
     deleteRecursively(loc)
     Files.move(locS, loc)
     register(spark, at, a)
-    dataFileCount(loc)
   }
 
   private def stem(fam: String, dir: String): String =
@@ -127,9 +157,11 @@ final class Store(family: String, source: String, dials: String,
 
     /** Write `df` as table artifact `a` at its directory, with the declared
       * bucketing, replacing whatever is there. */
-    def write(df: DataFrame, a: Artifact): Unit = {
+    def write(df: DataFrame, a: Artifact): Unit = write(df, a, table(a), path(a))
+
+    private[Store] def write(df: DataFrame, a: Artifact, name: String, loc: String): Unit = {
       val w = a.bucket.fold(df.write) { case (c, n) => df.write.bucketBy(n, c) }
-      w.option("path", path(a)).mode("overwrite").saveAsTable(table(a))
+      w.option("path", loc).mode("overwrite").saveAsTable(name)
     }
   }
 }
@@ -144,6 +176,13 @@ object Store {
     */
   final case class Artifact(suffix: String = "", columns: String = "",
       bucket: Option[(String, Int)] = None, family: Option[String] = None)
+
+  /** Test hook: the next [[Store.replace]] fails after its staging write
+    * (self-clearing). */
+  private[graft] val crashAfterStaging = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Physical-plan traversal that descends into adaptive query stages. */
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   private def warehousePath(spark: SparkSession): Path =
     Paths.get(new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)

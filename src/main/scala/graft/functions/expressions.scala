@@ -219,6 +219,104 @@ case class ShingleHashes(child: Expression, k: Int = 5,
     copy(child = newChild)
 }
 
+/** MinHash signature of one document in ONE loop — the kernel behind the
+  * persisted signature store's build, probe and absorb. Folds the
+  * document's shingle hashes (the [[ShingleHashes]] array) into
+  * `perms.size` minima `min((a·h + b) % prime)`, skipping every hash in
+  * the `hot` list (the store's df cut), and returns null when no hash
+  * survives (a null input, or every shingle hot). Value contract: equal
+  * to the explode → hot anti-join → distinct → per-permutation `min`
+  * chain it replaced, because `min` ignores multiplicity. Every hash must
+  * lie in `[0, prime)` — the bound that keeps `a·h + b` exact in a Long
+  * for `a, b < 2^31` — and one outside it fails loudly.
+  */
+case class MinhashSignature(child: Expression, hot: Seq[Long],
+    perms: Seq[(Long, Long)], prime: Long) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "minhash_signature"
+  // the hot list runs to thousands of hashes: plans print its size only
+  override def toString: String = s"$prettyName($child, hot[${hot.size}])"
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, false) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"minhash_signature requires array<bigint> (no null elements), got ${other.catalogString}")
+    }
+
+  @transient private lazy val hotSorted: Array[Long] = hot.toArray.sorted
+  @transient private lazy val permA: Array[Long] = perms.map(_._1).toArray
+  @transient private lazy val permB: Array[Long] = perms.map(_._2).toArray
+
+  override def nullSafeEval(input: Any): Any = {
+    val hs = input.asInstanceOf[ArrayData]
+    val m = Array.fill(permA.length)(Long.MaxValue)
+    var any = false
+    var i = 0
+    while (i < hs.numElements()) {
+      val h = hs.getLong(i)
+      if (h < 0L || h >= prime)
+        throw new IllegalArgumentException(
+          s"minhash_signature: shingle hash $h outside [0, $prime)")
+      if (java.util.Arrays.binarySearch(hotSorted, h) < 0) {
+        any = true
+        var j = 0
+        while (j < permA.length) {
+          val v = (permA(j) * h + permB(j)) % prime
+          if (v < m(j)) m(j) = v
+          j += 1
+        }
+      }
+      i += 1
+    }
+    if (any) new org.apache.spark.sql.catalyst.util.GenericArrayData(m) else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val hotRef = ctx.addReferenceObj("mhHot", hotSorted, "long[]")
+    val aRef = ctx.addReferenceObj("mhA", permA, "long[]")
+    val bRef = ctx.addReferenceObj("mhB", permB, "long[]")
+    nullSafeCodeGen(ctx, ev, c => {
+      val m = ctx.freshName("m")
+      val any = ctx.freshName("any")
+      val i = ctx.freshName("i")
+      val j = ctx.freshName("j")
+      val h = ctx.freshName("h")
+      val v = ctx.freshName("v")
+      s"""
+         |long[] $m = new long[${permA.length}];
+         |java.util.Arrays.fill($m, Long.MAX_VALUE);
+         |boolean $any = false;
+         |for (int $i = 0; $i < $c.numElements(); $i++) {
+         |  long $h = $c.getLong($i);
+         |  if ($h < 0L || $h >= ${prime}L) {
+         |    throw new IllegalArgumentException(
+         |      "minhash_signature: shingle hash " + $h + " outside [0, $prime)");
+         |  }
+         |  if (java.util.Arrays.binarySearch($hotRef, $h) < 0) {
+         |    $any = true;
+         |    for (int $j = 0; $j < ${permA.length}; $j++) {
+         |      long $v = ($aRef[$j] * $h + $bRef[$j]) % ${prime}L;
+         |      if ($v < $m[$j]) $m[$j] = $v;
+         |    }
+         |  }
+         |}
+         |if ($any) {
+         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($m);
+         |} else {
+         |  ${ev.isNull} = true;
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
+    copy(child = newChild)
+}
+
 /** All ordered pairs (x(i), x(j)), i < j, of a long array, each packed
   * as `(x(i) << 32) | x(j)` — the codegen kernel behind the co-supply
   * pair generation (M-block). Value contract: the packed long unpacks
@@ -674,6 +772,10 @@ object GraftExpressions {
 
   def shingle_hashes(c: Column, k: Int = 5, modulus: Long = 4294967291L): Column =
     GraftBridge.column(ShingleHashes(GraftBridge.expression(c), k, modulus))
+
+  def minhash_signature(hashes: Column, hot: Seq[Long], perms: Seq[(Long, Long)],
+      prime: Long): Column =
+    GraftBridge.column(MinhashSignature(GraftBridge.expression(hashes), hot, perms, prime))
 
   def packed_pairs(c: Column): Column =
     GraftBridge.column(PackedPairs(GraftBridge.expression(c)))

@@ -775,11 +775,18 @@ object Dedup {
     * (non-eval) documents ([[buildCount]] is the spec's observability
     * hook).
     *
-    * Two tables: the wide per-doc signature (bucketed by doc_id, so
-    * the est_sim verification join against it arrives pre-shuffled)
-    * and the hot-shingle exclusion list LEARNED ON THE EXISTING
-    * CORPUS — arriving batches must be signed under the store's df
-    * cut, not their own, or signatures stop being comparable.
+    * Two tables: the wide per-doc signature (bucketed by doc_id) and
+    * the hot-shingle exclusion list LEARNED ON THE EXISTING CORPUS —
+    * arriving batches must be signed under the store's df cut, not
+    * their own, or signatures stop being comparable.
+    *
+    * The build is two passes over the existing documents: a df pass
+    * (shingle occurrence counts, map-side combined) writes the hot
+    * list; then `repartition(SigBuckets, doc_id)` feeds the signing
+    * kernel ([[wide]]) and the bucketed write, so each task holds
+    * one bucket and writes one file. No shingle stream is cached and no
+    * (doc, shingle) row is ever shuffled. Every signing path — build,
+    * [[signBatch]], [[absorb]] — is the same kernel.
     */
   object SigStore {
     import java.util.concurrent.atomic.AtomicInteger
@@ -802,25 +809,34 @@ object Dedup {
       bucket = Some(("doc_id", SigBuckets)))
     private val Hot = Store.Artifact("_hot", "h BIGINT")
 
+    /** Hot lists by `_hot` table name. The name carries the corpus
+      * fingerprint, so an entry is one committed store state, read once
+      * and never per batch; a build drops its own entry.
+      */
+    private val hotLists = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
+
+    /** The hot list of the `_hot` table `hotT`, sorted. */
+    private[graft] def hotList(spark: SparkSession, hotT: String): Seq[Long] =
+      hotLists.getOrElseUpdate(hotT,
+        spark.table(hotT).collect().map(_.getLong(0)).sorted.toSeq)
+
     private val store = new Store("sig", "documents", contractTag + "_", Seq(Sig, Hot))(
       (spark, dir, at) => {
         buildCount.incrementAndGet()
+        hotLists.remove(at.table(Hot))
         val isNew = col("source").isin(EvalSources.map(x => x: Any): _*)
-        val existing = eager(shingleStream(spark, dir).filter(!isNew))
-          .select(col("doc_id"), col("h"))
+        val existing = Tables.documents(spark, dir).filter(!isNew)
         // df cut over the existing corpus's occurrence stream — the
-        // Zipf head, broadcastable at any scale (see MinhashDfCap)
-        val hot = existing.groupBy(col("h"))
-          .agg(count(lit(1)).as("df")).filter(col("df") > MinhashDfCap)
-          .select(col("h"))
-        at.write(hot.coalesce(1), Hot)
-        val sh = existing
-          .join(broadcast(spark.table(at.table(Hot))), Seq("h"), "left_anti")
-          .select(col("doc_id"), col("h")).distinct()
-        val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
-          min((lit(a) * col("h") + lit(b)) % MinhashPrime).as(s"m$i")
-        }
-        at.write(sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*), Sig)
+        // Zipf head, small at any scale (see MinhashDfCap)
+        at.write(existing
+          .select(explode(graft.functions.GraftExpressions.shingle_hashes(
+            normText(col("text")))).as("h"))
+          .groupBy(col("h")).agg(count(lit(1)).as("df"))
+          .filter(col("df") > MinhashDfCap).select(col("h")).coalesce(1), Hot)
+        // the repartition shares the bucket writer's murmur3 hash: each
+        // task signs exactly one bucket and writes one file
+        at.write(wide(existing.repartition(SigBuckets, col("doc_id")),
+          hotList(spark, at.table(Hot))), Sig)
       })
 
     /** Register-or-build; returns (signature table, hot-list table). */
@@ -834,65 +850,66 @@ object Dedup {
       store.deregister(spark, dir)
 
     /** Absorb an arriving batch INTO the store: sign it under the
-      * store's df cut (identical arithmetic to the probe path) and
-      * APPEND the signatures to the bucketed signature table — so the
-      * NEXT batch near-dups against previously absorbed batches, not
-      * just the original corpus. This is how the store grows between
-      * the full rebuilds the corpus-fingerprint staleness contract
-      * triggers; the hot-list stays frozen at build time (absorbed
-      * batches must be signed under the SAME cut or signatures stop
-      * being comparable — re-learning it would require re-signing
-      * everything, which is exactly the rebuild).
+      * store's df cut ([[signBatch]], the probe's kernel) and APPEND the
+      * signatures to the bucketed signature table — so the NEXT batch
+      * near-dups against previously absorbed batches, not just the
+      * original corpus. This is how the store grows between the full
+      * rebuilds the corpus-fingerprint staleness contract triggers; the
+      * hot-list stays frozen at build time (absorbed batches must be
+      * signed under the SAME cut or signatures stop being comparable —
+      * re-learning it would require re-signing everything, which is
+      * exactly the rebuild).
       *
-      * Each absorb is one bucketed append job: new files land per
-      * bucket, so the file count grows O(absorbs × buckets). Run
+      * The signatures are repartitioned on the bucket column before the
+      * append, so each absorb adds at most [[SigBuckets]] files. Run
       * [[compactStore]] on the maintenance cadence to restore the
       * one-file-per-bucket layout. Returns signature rows appended
       * (docs whose shingles all fell to the hot cut sign nothing).
       */
     def absorb(spark: SparkSession, dir: String, batchDocs: DataFrame): Long = {
-      val (t, th) = ensure(spark, dir)
-      val sigs = signBatch(spark, th, batchDocs).cache()
-      val n = sigs.count()
-      sigs.write.mode("append").insertInto(t)
-      sigs.unpersist()
+      val at = store.ensure(spark, dir)
+      val n = store.append(spark, at, Sig, signBatch(spark, at.table(Hot), batchDocs)
+        .repartition(SigBuckets, col("doc_id")))
       // a session that cached the table pre-absorb must not serve the
       // pre-append snapshot
-      spark.catalog.refreshTable(t)
+      spark.catalog.refreshTable(at.table(Sig))
       n
     }
 
     /** Compact the signature table back to ONE data file per bucket
       * after a run of [[absorb]]s ([[graft.Store.compact]]), preserving
-      * the bucket spec the pre-shuffled verification join needs. No
-      * re-shingling, no signature recomputation: the spec pins
-      * [[buildCount]] across it, and the serialized absorb* → compact
-      * cycle is spec-proven repeatable. Returns the data-file count
-      * after compaction (≤ [[SigBuckets]]).
+      * the bucket spec. No re-shingling, no signature recomputation: the
+      * spec pins [[buildCount]] across it, and the serialized absorb* →
+      * compact cycle is spec-proven repeatable. Returns the data-file
+      * count after compaction (≤ [[SigBuckets]]).
       */
     def compactStore(spark: SparkSession, dir: String): Int =
       store.compact(spark, store.ensure(spark, dir), Sig)
   }
 
+  /** Wide signatures (doc_id, m0..m31) of (doc_id, text) rows under the
+    * hot list, one [[graft.functions.MinhashSignature]] kernel call per
+    * document; documents with no surviving shingle sign no row.
+    */
+  private def wide(docs: DataFrame, hot: Seq[Long]): DataFrame =
+    docs.select(col("doc_id"), graft.functions.GraftExpressions.minhash_signature(
+        graft.functions.GraftExpressions.shingle_hashes(normText(col("text"))),
+        hot, perms, MinhashPrime).as("s"))
+      // rows drop through an explode of a 0- or 1-element array: a null
+      // filter would be pushed below the kernel and evaluate it twice
+      .select(col("doc_id"), explode(when(col("s").isNotNull, array(col("s")))).as("sig"))
+      .select(col("doc_id") +: (0 until NumPerms).map(i => col("sig")(i).as(s"m$i")): _*)
+
   /** Sign an arriving (doc_id, text) batch under the STORE's frozen
-    * hot-list df cut — the single signing path shared by the probe
-    * ([[neardupMatches]]), the streaming twin, and [[SigStore.absorb]];
-    * map-only over the batch, the corpus is never re-shingled.
+    * hot list (the `_hot` table `hotT`, read once per store state) —
+    * the signing path shared by the probe ([[neardupMatches]]), the
+    * streaming twin, and [[SigStore.absorb]], and the same kernel the
+    * store was built with. Map-only over the batch: no shuffle, and the
+    * corpus is never re-shingled.
     */
   private[graft] def signBatch(spark: SparkSession, hotT: String,
-      batchDocs: DataFrame): DataFrame = {
-    val minCols = perms.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % MinhashPrime).as(s"m$i")
-    }
-    batchDocs
-      .repartition(spreadWidth(spark))
-      .select(col("doc_id"), normText(col("text")).as("t"))
-      .select(col("doc_id"),
-        explode(graft.functions.GraftExpressions.shingle_hashes(col("t"))).as("h"))
-      .join(broadcast(spark.table(hotT)), Seq("h"), "left_anti")
-      .select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-  }
+      batchDocs: DataFrame): DataFrame =
+    wide(batchDocs, SigStore.hotList(spark, hotT))
 
   /** Incremental NEAR-dup ingest: the arriving batch (eval-source
     * docs, the stand-in "new" split) is signed map-only under the
@@ -918,33 +935,38 @@ object Dedup {
     * against the persisted [[SigStore]] — the shared core of the
     * batch query above and the streaming ingest twin
     * ([[graft.streaming.EventStream.streamNeardupIngestToFiles]]).
-    * The batch is signed map-only under the STORE's hot-list (its df
-    * cut, not the batch's own), band-joined against stored
-    * signatures, and verified by signature agreement.
+    *
+    * One pass over the store: the batch is signed map-only under the
+    * STORE's hot list ([[signBatch]]), each side's band rows carry
+    * their own minima, and one equi-join on (band, bh) yields
+    * (new_id, old_id, est_sim) inline; a pair sharing several bands
+    * yields the same row once per band, so a `distinct` ends the plan.
+    * The store is scanned once, no candidate is re-joined to either
+    * side, and nothing is cached, so a long-running stream leaves no
+    * cache entries behind.
+    *
+    * Join strategy: the band join carries no broadcast hint. A
+    * micro-batch is tiny, so Catalyst's size statistics broadcast it
+    * and the store's band rows never move; a batch too large for the
+    * broadcast threshold (q_incremental_neardup passes the whole eval
+    * split) shuffles both sides.
     */
   def neardupMatches(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame = {
     val (sigT, hotT) = SigStore.ensure(spark, dir)
-    val stored = spark.table(sigT)
-    val batch = signBatch(spark, hotT, batchDocs).cache()
-    eager(batch)
     def bandsOf(wide: DataFrame): DataFrame = wide
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val cand = bandsOf(batch).as("x")
-      .join(bandsOf(stored).as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
-      .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("old_id"))
-      .distinct()
+      .select(col("*"), explode(array(bandStructs: _*)).as("bb"))
+      .select(col("*"), col("bb.band").as("band"), col("bb.bh").as("bh")).drop("bb")
     val matches = (0 until NumPerms)
-      .map(i => when(col(s"p.m$i") === col(s"q.m$i"), 1).otherwise(0))
+      .map(i => when(col(s"x.m$i") === col(s"y.m$i"), 1).otherwise(0))
       .reduce(_ + _)
-    cand
-      .join(batch.as("p"), col("new_id") === col("p.doc_id"))
-      .join(stored.as("q"), col("old_id") === col("q.doc_id"))
-      .select(col("new_id"), col("old_id"),
+    bandsOf(signBatch(spark, hotT, batchDocs)).as("x")
+      .join(bandsOf(spark.table(sigT)).as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
+      .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("old_id"),
         (matches.cast("double") / NumPerms).as("est_sim"))
       .filter(col("est_sim") >= TextClusterMinSim)
+      .distinct()
   }
 
   /** Oracle: the identical two-sided signature pipeline from scratch —

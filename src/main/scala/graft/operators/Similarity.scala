@@ -1517,25 +1517,26 @@ object Similarity {
     def absorb(spark: SparkSession, dir: String, batch: DataFrame,
         nlist: Int = 16): Long = {
       val assigned = assignVectors(spark, dir, batch, nlist).cache()
-      val n = assigned.count()
       val at = ensure(spark, dir, nlist)
-      val t = at.table(Asg)
-      assigned.write.mode("append").insertInto(t)
       // keep the norm augmentation true under growth: merge the BATCH's
       // per-cell maxima into the persisted table — a batch-sized
       // aggregate folded onto nlist rows (collect is the bounded-verdict
-      // device: ≤ nlist rows, and the read must complete before the
-      // same-location overwrite)
+      // device: ≤ nlist rows). The merged table is staged and swapped in
+      // BEFORE the append, so a crash before the swap leaves the whole
+      // index as it was, and one after it leaves every cell's max norm
+      // at or above the truth.
       val merged = spark.table(at.table(Norm))
         .unionByName(assigned.groupBy(col("cell"))
           .agg(max(round(VectorFunctions.norm2(col("v")), 6)).as("mn")))
         .groupBy(col("cell")).agg(max(col("mn")).as("mn"))
         .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
+      store(nlist).replace(spark, at, Norm,
+        spark.createDataFrame(merged).toDF("cell", "mn").coalesce(1))
+      val n = store(nlist).append(spark, at, Asg, assigned)
       assigned.unpersist()
-      at.write(spark.createDataFrame(merged).toDF("cell", "mn").coalesce(1), Norm)
       // the get() path caches the table — must not serve the pre-append
       // snapshot
-      spark.catalog.refreshTable(t)
+      spark.catalog.refreshTable(at.table(Asg))
       n
     }
 

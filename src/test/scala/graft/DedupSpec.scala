@@ -227,6 +227,41 @@ class DedupSpec extends AnyFunSuite {
       "changed corpus must trigger a store rebuild, not serve stale signatures")
   }
 
+  test("after a corpus mutation and rebuild the probe signs under the new hot list, never the memoised old one") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_hot_memo").toString
+    val docs = Paths.get(dir, "documents.parquet")
+    Files.createDirectories(docs)
+    Files.copy(Paths.get(sf, "documents.parquet"), docs.resolve("part-0.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val batch = Tables.documents(spark, sf).select((col("doc_id") + 9000000L).as("doc_id"), col("text"))
+    def hotRows(t: String) = spark.table(t).as[Long].collect().sorted.toSeq
+    /** The hot list the probe's signing kernel carries. */
+    def probeHot(): Seq[Long] = Dedup.neardupMatches(spark, dir, batch).queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect {
+        case k: graft.functions.MinhashSignature => k.hot }))
+      .distinct.toList match { case Seq(h) => h; case hs => fail(s"expected one kernel: $hs") }
+    val (_, hot0) = Dedup.SigStore.ensure(spark, dir)
+    assert(probeHot() == hotRows(hot0))
+    // every shingle's df doubles: the cut admits more hot shingles
+    Files.copy(Paths.get(sf, "documents.parquet"), docs.resolve("part-1.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val (sig1, hot1) = Dedup.SigStore.ensure(spark, dir)
+    assert(hot1 != hot0 && hotRows(hot1).size > hotRows(hot0).size,
+      "the mutated corpus must have its own, larger hot list")
+    assert(probeHot() == hotRows(hot1), "the probe signed under the pre-mutation hot list")
+    // the rebuilt store and the batch's signatures both equal the
+    // reference chain under the new hot list
+    val existing = Tables.documents(spark, dir)
+      .filter(!col("source").isin(Dedup.EvalSources.map(x => x: Any): _*))
+      .select(col("doc_id"), col("text"))
+    assert(MinhashReference.sigs(spark.table(sig1)) ==
+      MinhashReference.sigs(MinhashReference.chain(existing, hotRows(hot1))))
+    assert(MinhashReference.sigs(Dedup.signBatch(spark, hot1, batch)) ==
+      MinhashReference.sigs(MinhashReference.chain(batch, hotRows(hot1))))
+  }
+
   test("approx percentiles stay within bounded rank error of exact") {
     import org.apache.spark.sql.functions.col
     // sketch guarantee is rank-space (a returned value's empirical rank

@@ -4,6 +4,33 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftExpressions._
 
+/** The MinHash signing chain the store's kernel replaced: explode the
+  * shingle hashes, anti-join the hot list, distinct, then one `min` per
+  * permutation. The reference every kernel parity check compares with.
+  */
+object MinhashReference {
+  import org.apache.spark.sql.DataFrame
+  import graft.operators.Dedup
+
+  /** (doc_id, m0..m31) of (doc_id, text) rows; no row when every
+    * shingle is hot. */
+  def chain(docs: DataFrame, hot: Seq[Long]): DataFrame = {
+    import docs.sparkSession.implicits._
+    val minCols = Dedup.perms.zipWithIndex.map { case ((a, b), i) =>
+      min((lit(a) * col("h") + lit(b)) % Dedup.MinhashPrime).as(s"m$i")
+    }
+    docs.select(col("doc_id"),
+        explode(shingle_hashes(graft.functions.TextFunctions.normText(col("text")))).as("h"))
+      .join(broadcast(hot.toDF("h")), Seq("h"), "left_anti")
+      .select(col("doc_id"), col("h")).distinct()
+      .groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
+  }
+
+  /** doc_id -> signature of a (doc_id, m0..m31) frame. */
+  def sigs(wide: DataFrame): Map[Long, Seq[Long]] =
+    wide.collect().map(r => r.getLong(0) -> (1 to Dedup.NumPerms).map(r.getLong)).toMap
+}
+
 class ExpressionSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
@@ -378,5 +405,59 @@ class ExpressionSpec extends AnyFunSuite {
     val s = spark.range(0, n, 1, 4).select((col("id") * 0 + big).as("x"))
       .agg(exactSum(money(col("x")))).first().getDecimal(0)
     assert(s.compareTo(new JBigDecimal(big.toString).multiply(new JBigDecimal(n))) == 0)
+  }
+
+  test("minhash_signature equals the explode/anti-join/distinct/min chain, codegen and interpreted, ANSI on and off") {
+    import graft.operators.Dedup
+    val rnd = new scala.util.Random(20)
+    val words = Seq("the", "data", "pipeline", "ÿé", "日本語", "𝄞x", "near", "dup")
+    val random = (0 until 300).map { i =>
+      val n = rnd.nextInt(60)
+      (i.toLong + 100, Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" "))
+    }
+    val allHot = "hot hot hot"
+    val fixed = Seq[(Long, String)](
+      (1L, null), (2L, ""), (3L, "abc"), (4L, "aaaaaaaaaaaaaaaaaaaa"),
+      (5L, "Héllo  Wörld ☃ 日本語テキスト 𝄞𝄞𝄞 end"), (6L, allHot), (7L, "  Mixed\tCASE   spaces "))
+    val docs = (fixed ++ random).toDF("doc_id", "text").repartition(4)
+    val hashes = docs.select(col("doc_id"),
+        explode(shingle_hashes(graft.functions.TextFunctions.normText(col("text")))).as("h"))
+    // hot: every shingle of doc 6, plus the 40 most frequent shingles
+    val hot = (hashes.filter(col("doc_id") === 6L).select("h").as[Long].collect() ++
+      hashes.groupBy("h").count().orderBy(col("count").desc, col("h")).limit(40)
+        .select("h").as[Long].collect()).distinct.toSeq
+    def kernel(hs: Seq[Long]): Map[Long, Option[Seq[Long]]] =
+      docs.select(col("doc_id"), minhash_signature(
+          shingle_hashes(graft.functions.TextFunctions.normText(col("text"))),
+          hs, Dedup.perms, Dedup.MinhashPrime).as("sig"))
+        .as[(Long, Option[Seq[Long]])].collect().toMap
+    val saved = spark.conf.getOption("spark.sql.codegen.fallback")
+    // a kernel that fails to compile must fail here, not fall back
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try underEachMode { _ =>
+      for (hs <- Seq(hot, Seq.empty[Long])) {
+        val got = kernel(hs)
+        val ref = MinhashReference.sigs(MinhashReference.chain(docs, hs))
+        assert(got.size == fixed.size + random.size)
+        assert(got.collect { case (d, Some(s)) => d -> s } == ref,
+          s"kernel differs from the chain (hot list of ${hs.size})")
+        assert(got(1L).isEmpty, "null text signs nothing")
+        assert(got(2L).isDefined && got(3L).isDefined && got(5L).isDefined)
+        assert(got(6L).isEmpty == hs.nonEmpty, "a document whose shingles are all hot signs nothing")
+      }
+      // the bound that keeps a·h + b exact in a Long
+      for (bad <- Seq(-1L, Dedup.MinhashPrime)) {
+        val e = intercept[Exception](Seq(Seq(1L, bad)).toDF("hs").repartition(2)
+          .select(minhash_signature(col("hs"), Seq.empty, Dedup.perms, Dedup.MinhashPrime))
+          .collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null &&
+          m.contains(s"minhash_signature: shingle hash $bad outside [0, ${Dedup.MinhashPrime})")),
+          s"expected the named range error, got: ${e.getMessage.take(300)}")
+      }
+    } finally saved match {
+      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+      case None => spark.conf.unset("spark.sql.codegen.fallback")
+    }
   }
 }

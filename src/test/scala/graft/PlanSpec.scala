@@ -124,6 +124,30 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set(key, saved)
   }
 
+  test("incremental near-dup band join carries no hint and shuffles once size-based broadcast is off") {
+    import graft.operators.Dedup
+    // the whole eval split is this query's "batch": at scale it must
+    // shuffle; only Catalyst's size statistics may broadcast a small one
+    val joins = Dedup.qIncrementalNeardup(spark, sf).queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    val bandJoins = joins.filter(_.condition.exists(_.references.exists(_.name == "bh")))
+    assert(bandJoins.length == 1, s"expected the one (band, bh) equi-join: $joins")
+    bandJoins.foreach { j =>
+      assert(j.hint.leftHint.isEmpty && j.hint.rightHint.isEmpty,
+        s"band join must carry no broadcast hint: ${j.hint}")
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      val p = Dedup.qIncrementalNeardup(spark, sf).queryExecution.executedPlan.toString
+      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+        s"band join must shuffle once size-based broadcast is off:\n$p")
+      assert(!p.contains("BroadcastHashJoin"), s"nothing may force a broadcast:\n$p")
+    } finally spark.conf.set(key, saved)
+  }
+
   test("bigram surprisal shuffle-joins its count tables (corpus-scale, never forced broadcast)") {
     // same contract as B9, one model up: bigram counts and history
     // counts are corpus-scale, so with the size gate off the plan must

@@ -179,6 +179,57 @@ class StoreMaintenanceSpec extends AnyFunSuite {
       "second maintenance cycle must never rebuild")
   }
 
+  test("SigStore: each absorb adds at most SigBuckets files, however many docs the batch holds") {
+    val dir = privateCorpus("documents.parquet")
+    val (t, _) = Dedup.SigStore.ensure(spark, dir)
+    val loc = warehouse.resolve(t)
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    var files = Store.dataFileCount(loc)
+    assert(files <= Dedup.SigStore.SigBuckets, s"the build wrote $files files")
+    for (k <- 1 to 3) {
+      val n = Dedup.SigStore.absorb(spark, dir,
+        docs.select((col("doc_id") + k * 1000000L).as("doc_id"), col("text")))
+      assert(n > Dedup.SigStore.SigBuckets, s"absorb $k signed only $n rows")
+      val now = Store.dataFileCount(loc)
+      assert(now > files && now - files <= Dedup.SigStore.SigBuckets,
+        s"absorb $k of $n rows added ${now - files} files")
+      files = now
+    }
+  }
+
+  test("IvfIndex: an absorb that dies after staging its norm table leaves the index as committed") {
+    val dir = privateCorpus("embeddings.parquet")
+    val nlist = 16
+    val (asg0, _) = Similarity.IvfIndex.get(spark, dir, nlist)
+    val n0 = asg0.count()
+    val fits = Similarity.IvfIndex.fitCount.get
+    def normStored() = Similarity.IvfIndex.norms(spark, dir, nlist)
+      .as[(Int, Double)].collect().toMap
+    val norms0 = normStored()
+    // a ×10-scaled copy of an indexed vector raises its cell's max norm
+    val (id, v) = asg0.select("vec_id", "v").as[(Long, Seq[Double])]
+      .collect().minBy(_._1)
+    val big = Seq((id + 7000000L, v.map(_ * 10.0))).toDF("vec_id", "v")
+    Store.crashAfterStaging.set(true)
+    intercept[IllegalStateException](Similarity.IvfIndex.absorb(spark, dir, big, nlist))
+    assert(!Store.crashAfterStaging.get, "the crash hook must self-clear")
+    assert(normStored() == norms0, "the norm table changed before its swap")
+    assert(Similarity.IvfIndex.get(spark, dir, nlist)._1.count() == n0,
+      "the assignment grew although the absorb died")
+    // a cold session serves the committed rows, with no refit
+    spark.catalog.clearCache()
+    Similarity.IvfIndex.deregister(spark, dir, nlist)
+    assert(normStored() == norms0, "a cold session served a different norm table")
+    assert(Similarity.IvfIndex.fitCount.get == fits)
+    // the next absorb replaces the stale staging files and commits
+    assert(Similarity.IvfIndex.absorb(spark, dir, big, nlist) == 1L)
+    val norms1 = normStored()
+    assert(norms1.keySet == norms0.keySet &&
+      norms1.exists { case (c, mn) => mn > norms0(c) },
+      "the committed absorb must raise one cell's max norm")
+    assert(Similarity.IvfIndex.get(spark, dir, nlist)._1.count() == n0 + 1)
+  }
+
   test("IvfIndex: absorb assigns new vectors to frozen cells; compact preserves bucketing, fit pinned") {
     val dir = privateCorpus("embeddings.parquet")
     val nlist = 16

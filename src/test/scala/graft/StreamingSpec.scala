@@ -370,10 +370,14 @@ class StreamingSpec extends AnyFunSuite {
     input.addData(b1: _*)
     input.addData(b2: _*)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_neardup").toString
+    def cached() = org.apache.spark.sql.CacheProbe.entries(spark)
+    val before = cached()
     val streamed = EventStream.streamNeardupIngestToFiles(
       input.toDF().toDF("doc_id", "text"), sf01, s"$tmp/out", s"$tmp/cp")
       .select("new_id", "old_id", "est_sim")
       .as[(Long, Long, Double)].collect().toSet
+    // a micro-batch must leave nothing cached for the session's life
+    assert(cached() == before, s"the stream left ${cached() - before} cached relations behind")
     val batch = graft.operators.Dedup.qIncrementalNeardup(spark, sf01)
       .as[(Long, Long, Double)].collect().toSet
     assert(batch.nonEmpty, "batch ingest found no matches at sf0.01")
