@@ -115,7 +115,7 @@ final class Store(family: String, source: String, dials: String,
     // bucket writer's murmur3 hash), each task holds exactly one bucket,
     // and the write lands one file per bucket.
     replace(spark, at, a,
-      spark.read.parquet(at.path(a)).repartition(buckets, col(bucketCol)))
+      Tables.parquet(spark, at.path(a)).repartition(buckets, col(bucketCol)))
     dataFileCount(at.dir(a))
   }
 

@@ -1,14 +1,40 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 
 /** Parquet table loaders for the driver-generated star schema.
-  * Filters/projections applied downstream reach the scan via Catalyst
-  * (predicate pushdown + column pruning) — loaders stay bare.
+  * Every loader reads through [[parquet]], so building a DataFrame runs
+  * no Spark job; filters and projections applied downstream still reach
+  * the scan through Catalyst (predicate pushdown, column pruning).
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Read the flat parquet file or directory at `path` with the schema
+    * Spark would infer, read from one footer on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+    * .footerSchema]]). A bare `spark.read.parquet` infers it in a one-task
+    * Spark job while the DataFrame is built, whose scheduling costs far
+    * more than the footer read it wraps; this reads it with no job.
+    *
+    * No memo: each call reads the footer again, so a rewritten table is
+    * seen at once and there is nothing to invalidate. Paths the footer
+    * cannot answer (schema merging, globs, missing or empty paths,
+    * directories with subdirectories) fall back to `spark.read.parquet`,
+    * which raises Spark's own errors or discovers partitions.
+    *
+    * Not routed through here: [[graft.operators.Maintenance.compact]]'s
+    * hive-partitioned branch (its partition columns come only from Spark's
+    * partition discovery), the check tool [[Verify]] (it reads back what
+    * it wrote, and verifies through Spark's plain reader), and the
+    * streaming source of [[eventsStream]] (a FileStreamSource takes its
+    * schema up front; the schema itself comes from here).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftParquetBridge.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   def region(s: SparkSession, d: String): DataFrame = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = t(s, d, "nation")

@@ -114,7 +114,7 @@ object Tuning {
     */
   def qMllibTuning(spark: SparkSession, dir: String): DataFrame = {
     val loc = CvStore.ensure(spark, dir)
-    val pf = spark.read.parquet(loc)
+    val pf = Tables.parquet(spark, loc)
       .groupBy(col("reg_param"), col("elastic_net"), col("fold"))
       .agg(round(avg(when(col("prediction") === col("label"), 1.0)
         .otherwise(0.0)), 10).as("acc"),
@@ -187,7 +187,7 @@ object Tuning {
     */
   def qPipelineTuning(spark: SparkSession, dir: String): DataFrame = {
     val loc = PipeStore.ensure(spark, dir)
-    val pf = spark.read.parquet(loc)
+    val pf = Tables.parquet(spark, loc)
       .groupBy(col("num_features"), col("reg_param"), col("fold"))
       .agg(round(avg(when(col("prediction") === col("label"), 1.0)
         .otherwise(0.0)), 10).as("acc"),
@@ -251,8 +251,8 @@ object Tuning {
     */
   def qLearningCurve(spark: SparkSession, dir: String): DataFrame = {
     val loc = LearnStore.ensure(spark, dir)
-    val pred = spark.read.parquet(s"$loc/pred")
-    val bc = spark.read.parquet(s"$loc/asg")
+    val pred = Tables.parquet(spark, s"$loc/pred")
+    val bc = Tables.parquet(spark, s"$loc/asg")
       .groupBy(col("bucket")).agg(count(lit(1)).as("c"))
     val acc = pred.groupBy(col("hi"))
       .agg(round(avg(when(col("prediction") === col("label"), 1.0)
@@ -612,9 +612,9 @@ object Tuning {
   def qAlsRecommend(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val loc = AlsStore.ensure(spark, dir)
-    val u2 = spark.read.parquet(s"$loc/u")
-    val v1 = spark.read.parquet(s"$loc/v")
-    val rated = spark.read.parquet(s"$loc/rated")
+    val u2 = Tables.parquet(spark, s"$loc/u")
+    val v1 = Tables.parquet(spark, s"$loc/v")
+    val rated = Tables.parquet(spark, s"$loc/rated")
     val cand = u2.filter(col("c") <= 200)
       .crossJoin(broadcast(v1))
       .join(rated, Seq("c", "b"), "left_anti")

@@ -151,7 +151,7 @@ object Maintenance {
     if (partCols.isEmpty) {
       val totalBytes = files.map(_._2).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-      spark.read.parquet(inPath)
+      graft.Tables.parquet(spark, inPath)
         .repartition(nOut)
         .write.mode(SaveMode.Overwrite).parquet(outPath)
       nOut

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 
 /** Source/sink round-trips and partitioned-layout pruning — the I/O
@@ -13,17 +15,22 @@ class SourcesSpec extends AnyFunSuite {
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_$name").toString
 
-  test("events.ts canonicalizes to identical Long nanos from all three writer generations") {
+  // one instant, three shipped encodings of events.ts: ns-int64 (legacy
+  // nanosAsLong), µs TIMESTAMP_NTZ (current testdata), µs TIMESTAMP
+  private val nanos = Seq(1700000000123456000L, 1700003600987654000L)
+  private def tsGenerations: Seq[(DataFrame, String)] = {
     import spark.implicits._
-    // one instant, three shipped encodings: ns-int64 (legacy
-    // nanosAsLong), µs TIMESTAMP_NTZ (current testdata), µs TIMESTAMP
-    val nanos = Seq(1700000000123456000L, 1700003600987654000L)
     val asLong = nanos.toDF("ts")
     val asNtz = nanos.toDF("n")
       .select(expr("timestamp_micros(n DIV 1000)").cast("timestamp_ntz").as("ts"))
     val asLtz = nanos.toDF("n")
       .select(expr("timestamp_micros(n DIV 1000)").as("ts"))
-    for ((df, label) <- Seq((asLong, "long"), (asNtz, "ntz"), (asLtz, "ltz"))) {
+    Seq((asLong, "long"), (asNtz, "ntz"), (asLtz, "ltz"))
+  }
+
+  test("events.ts canonicalizes to identical Long nanos from all three writer generations") {
+    import spark.implicits._
+    for ((df, label) <- tsGenerations) {
       val out = Tables.normalizeEventTs(df)
       assert(out.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType, s"$label: dtype")
@@ -259,5 +266,99 @@ class SourcesSpec extends AnyFunSuite {
       case _ => true
     }, s"file ranges must be disjoint: ${ranges.mkString(",")}")
     assert(spark.read.parquet(out).count() == ev.count())
+  }
+
+  /** Spark job ids launched on this thread while `body` runs. */
+  private def jobsDuring(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = "graft_jobs_" + java.util.UUID.randomUUID()
+    sc.setJobGroup(group, "jobs while building DataFrames")
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).toSeq
+  }
+
+  /** The device's schema must be Spark's inferred one, read from a footer
+    * (not the fallback) and with no job. */
+  private def assertSparkSchema(path: String, label: String): Unit = {
+    assert(GraftParquetBridge.footerSchema(spark, path).isDefined,
+      s"$label: footer path not taken")
+    var df: DataFrame = null
+    val jobs = jobsDuring { df = Tables.parquet(spark, path) }
+    assert(jobs.isEmpty, s"$label: reading ran jobs $jobs")
+    assert(df.schema == spark.read.parquet(path).schema, s"$label: schema")
+  }
+
+  test("footer schemas equal Spark's inferred schemas for every corpus table") {
+    val names = Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings")
+    for (scale <- Seq("sf0.001", "sf0.01", "sf0.1"); n <- names)
+      assertSparkSchema(s"/root/testdata/$scale/$n.parquet", s"$scale/$n")
+  }
+
+  test("events loads the same schema as Spark's inference over every ts writer generation") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val fixtures = tsGenerations.map { case (df, label) =>
+      val d = tmp(s"ts_$label")
+      df.write.mode("overwrite").parquet(s"$d/events.parquet")
+      (d, label)
+    }
+    // the shipped ns generation: an INT64 TIMESTAMP(NANOS) column, which
+    // only the session's nanosAsLong conf turns into a Long
+    val nsDir = tmp("ts_nanos")
+    val nsType = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$nsDir/events.parquet"))
+      .withType(nsType).build()
+    val g = new SimpleGroupFactory(nsType)
+    try nanos.foreach(n => w.write(g.newGroup().append("ts", n))) finally w.close()
+    for ((d, label) <- fixtures :+ ((nsDir, "ns"))) {
+      assertSparkSchema(s"$d/events.parquet", label)
+      val ev = Tables.events(spark, d)
+      assert(ev.schema ==
+        Tables.normalizeEventTs(spark.read.parquet(s"$d/events.parquet")).schema, label)
+      assert(ev.schema("ts").dataType == org.apache.spark.sql.types.LongType, label)
+      assert(ev.select(expr("ts DIV 1000")).collect().map(_.getLong(0)).sorted
+        .sameElements(nanos.map(_ / 1000).sorted), s"$label: values")
+    }
+  }
+
+  test("a Spark-written multi-file directory reads with Spark's schema, skipping hidden files") {
+    val d = tmp("multi") + "/t"
+    Tables.orders(spark, sf).select("o_orderkey", "o_orderdate", "o_totalprice")
+      .repartition(3).write.parquet(d)
+    val names = new java.io.File(d).listFiles.map(_.getName)
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.endsWith(".parquet")) == 3, names.mkString(","))
+    assertSparkSchema(d, "multi-file")
+    assert(Tables.parquet(spark, d).count() == Tables.orders(spark, sf).count())
+  }
+
+  test("a table rewritten with an added column is seen by the next load (no memo)") {
+    val d = tmp("rewrite")
+    val base = Tables.region(spark, sf)
+    base.write.parquet(s"$d/region.parquet")
+    assert(Tables.t(spark, d, "region").columns.sameElements(base.columns))
+    base.withColumn("r_extra", lit(1L))
+      .write.mode("overwrite").parquet(s"$d/region.parquet")
+    val again = Tables.t(spark, d, "region")
+    assert(again.columns.sameElements(base.columns :+ "r_extra"))
+    assert(again.schema == spark.read.parquet(s"$d/region.parquet").schema)
+  }
+
+  test("an empty directory fails with Spark's UNABLE_TO_INFER_SCHEMA") {
+    val e = intercept[AnalysisException](Tables.parquet(spark, tmp("no_files")))
+    assert(e.getCondition == "UNABLE_TO_INFER_SCHEMA", e.getMessage)
+  }
+
+  test("building the scan queries' DataFrames runs no Spark job") {
+    val dir = "/root/testdata/sf0.01"
+    val built = jobsDuring {
+      Seq("q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
+        "q_rollup", "q_session_stats").foreach(q => SparkEntry.queries(q)(spark, dir))
+    }
+    assert(built.isEmpty, s"jobs ran while the DataFrames were built: $built")
   }
 }
