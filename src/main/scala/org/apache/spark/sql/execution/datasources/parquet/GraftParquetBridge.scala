@@ -1,18 +1,21 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
 import java.io.FileNotFoundException
+import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
-/** Bridge into Spark's package-private parquet schema inference
-  * (`ParquetFileFormat.readParquetFootersInParallel`/`readSchemaFromFooter`),
-  * so a reader can compute the schema Spark would infer without the
-  * one-task Spark job its inference runs (`mergeSchemasInParallel`
-  * always schedules one, even for a single file).
+/** Bridge into Spark's package-private parquet footer-to-schema code
+  * (`ParquetFileFormat.readSchemaFromFooter`), so a reader can compute the
+  * schema Spark would infer without the one-task Spark job its inference
+  * runs (`mergeSchemasInParallel` always schedules one, even for a single
+  * file).
   */
 object GraftParquetBridge {
   // the summary files Spark's inference prefers, in its order
@@ -29,8 +32,10 @@ object GraftParquetBridge {
     *
     * None where only Spark's own inference gives the answer: schema
     * merging on, a glob, a missing or empty path (Spark raises its own
-    * PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA), or a directory with
-    * subdirectories (partition discovery adds columns).
+    * PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA), a directory with
+    * subdirectories (partition discovery adds columns), or a footer that
+    * cannot be read (Spark skips it or raises its own error, as the
+    * session's `ignoreCorruptFiles` says).
     */
   def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val sqlConf = spark.sessionState.conf
@@ -44,15 +49,16 @@ object GraftParquetBridge {
       else {
         val kids = fs.listStatus(p)
           .filterNot(k => HadoopFSUtils.shouldFilterOutPathName(k.getPath.getName))
-          .sortBy(_.getPath.toString)
         if (kids.exists(_.isDirectory)) None
         else summaries.flatMap(n => kids.find(_.getPath.getName == n)).headOption
-          .orElse(kids.find(k => !summaries.contains(k.getPath.getName)))
+          .orElse(kids.filterNot(k => summaries.contains(k.getPath.getName))
+            .minByOption(_.getPath.toString))
       }
-    file.map { f =>
-      val footer = ParquetFileFormat
-        .readParquetFootersInParallel(conf, Seq(f), ignoreCorruptFiles = false).head
-      ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(sqlConf))
-    }
+    for {
+      f <- file
+      meta <- try Some(ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))
+        catch { case NonFatal(_) => None }
+    } yield ParquetFileFormat.readSchemaFromFooter(
+      new Footer(f.getPath, meta), new ParquetToSparkSchemaConverter(sqlConf))
   }
 }
